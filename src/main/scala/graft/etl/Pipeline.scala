@@ -14,11 +14,12 @@ import graft.model.Schemas.ExtractionState
 
 /** The 3-phase pipeline driver (O1-O3, `/root/reference/src/main.py:18-74`)
   * re-expressed Spark-first: extract is driver-side HTTP + raw-zone
-  * snapshots + state commits; transform and load are ONE lazy logical plan
-  * (explode → cast → union → merge-join) that only executes at the sink
-  * action. Phase failures abort the run with a phase-tagged error; a
-  * single bad FRED series is skipped, not fatal (O2,
-  * `src/main.py:41-47`).
+  * snapshots + state commits; transform builds one lazy fact plan
+  * (explode → cast → union → sort) with no action; load evaluates it
+  * exactly once, as the persisted classification of [[mergeFact]] that
+  * feeds both the run report and the partition rewrite. Phase failures
+  * abort the run with a phase-tagged error; a single bad FRED series is
+  * skipped, not fatal (O2, `src/main.py:41-47`).
   */
 object Pipeline {
 
@@ -83,40 +84,48 @@ object Pipeline {
     * (AtomicTable), rewriting ONLY the source partitions that actually
     * changed — the R1 hash-skip idea applied at the storage layer: a
     * one-series revision must not rewrite the other sources' terabytes.
-    * The commit is AtomicTable's single version-pointer rename, matching
-    * the reference's one-transaction MERGE (`src/load.py:86-103`): a crash
-    * mid-write leaves the table readable at the previous version (no
-    * localCheckpoint needed — staged txn dirs never overwrite the files
-    * the plan is reading). */
+    *
+    * The incoming plan is classified once: the classified frame is
+    * persisted, one `(source, action)` count over it yields both the
+    * report and the changed sources, and the upsert reads its incoming
+    * rows back from the same cache, so the fact plan is never
+    * re-evaluated. The rewrite is rebalanced by source and sorted within
+    * tasks: one file per rewritten partition, unless AQE splits a skewed
+    * partition across tasks. The commit is AtomicTable's single
+    * version-pointer rename, matching the reference's one-transaction
+    * MERGE (`src/load.py:86-103`): a crash mid-write leaves the table
+    * readable at the previous version, and staged txn dirs never
+    * overwrite the files the plan is reading. */
   def mergeFact(spark: SparkSession, incoming: DataFrame, factPath: String): Map[String, Long] = {
     val existing = AtomicTable.read(spark, factPath, Schemas.fact)
     val keys = Seq("series_id", "date")
     val deduped = Merge.lastWinsByKey(incoming, keys, col("value").desc_nulls_last)
-    val classified = Merge.classify(deduped, existing, keys, "value")
-    val stats = Merge.stats(classified)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    // sources with at least one insert/update; unchanged partitions are
-    // neither read again nor rewritten
-    val changedSources = classified.filter(col("action") =!= "unchanged")
-      .select("source").distinct().collect().map(_.getString(0)).toSet
-    if (changedSources.nonEmpty) {
-      val newRows = Merge.upsert(
-        existing.filter(col("source").isInCollection(changedSources)),
-        deduped.filter(col("source").isInCollection(changedSources)), keys)
-      AtomicTable.replacePartitions(spark, factPath, newRows, "source")
-    }
-    Map("inserted" -> 0L, "updated" -> 0L, "unchanged" -> 0L) ++
-      stats.map { case (k, v) =>
-        (k match { case "insert" => "inserted"; case "update" => "updated"; case o => o }) -> v
+    val classified = Merge.classify(deduped, existing, keys, "value").persist()
+    try {
+      val counts = classified.groupBy("source", "action").count().collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      // sources with at least one insert/update; unchanged partitions are
+      // neither read again nor rewritten
+      val changedSources = counts.collect { case (s, a, _) if a != "unchanged" => s }.toSet
+      if (changedSources.nonEmpty) {
+        val changed = col("source").isInCollection(changedSources)
+        val newRows = Merge.upsert(existing.filter(changed),
+          classified.filter(changed).drop("action"), keys)
+        AtomicTable.replacePartitions(spark, factPath,
+          newRows.hint("rebalance", col("source"))
+            .sortWithinPartitions("source", "series_id", "date"), "source")
       }
+      def total(action: String) = counts.collect { case (_, `action`, n) => n }.sum
+      Map("inserted" -> total("insert"), "updated" -> total("update"),
+        "unchanged" -> total("unchanged"))
+    } finally classified.unpersist()
   }
 
   /** Dim load: insert-if-absent, append-only (`src/load.py:108-134`). */
   def mergeDim(spark: SparkSession, incoming: DataFrame, dimPath: String): Map[String, Long] = {
     val exists = Files.exists(Paths.get(dimPath))
     val existing =
-      if (exists) spark.read.parquet(dimPath)
+      if (exists) spark.read.schema(Schemas.dim).parquet(dimPath)
       else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         Schemas.dim)
     val newRows = Merge.insertIfAbsent(incoming, existing, Seq("series_id")).cache()

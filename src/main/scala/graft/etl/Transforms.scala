@@ -21,8 +21,12 @@ object Transforms {
   }
 
   /** T12: n-ary union of per-source fact frames + re-sort oldest-first.
-    * In Spark the unions fuse into one plan node; the sort is the only
-    * exchange. Empty frames union fine (`tests/test_transform.py:213-218`). */
+    * In Spark the unions fuse into one plan node; the per-source frames
+    * sort locally ([[graft.ingest.Normalize]] T10), so this sort's range
+    * exchange is the only exchange. When every input is one partition,
+    * as normalized responses are, the union stays one partition and the
+    * sort needs no exchange at all. Empty frames union fine
+    * (`tests/test_transform.py:213-218`). */
   def combineFactTables(frames: Seq[DataFrame]): DataFrame = {
     require(frames.nonEmpty, "combineFactTables needs at least one frame")
     canonicalSort(frames.reduce(_ unionByName _))

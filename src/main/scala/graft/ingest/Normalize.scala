@@ -15,6 +15,12 @@ import graft.model.Schemas
   * oldest-first ordering. All built-ins — the plans stay fully inside
   * whole-stage codegen and Catalyst prunes the unused raw fields at the
   * scan.
+  *
+  * T10 is a local sort: a raw response is one JSON document, so its
+  * exploded rows already sit in one partition, and `coalesce(1)` plus
+  * `sortWithinPartitions` gives the same total order as a global sort
+  * without a range exchange or its sampling job. `coalesce(1)` keeps the
+  * order total when a caller hands in a multi-partition raw frame.
   */
 object Normalize {
 
@@ -31,7 +37,7 @@ object Normalize {
         to_date(col("o.date"), "yyyy-MM-dd").as("date"),
         expr("try_cast(o.value AS double)").as("value"), // "." -> null
         lit("FRED").as("source"))
-      .orderBy("date")
+      .coalesce(1).sortWithinPartitions("date")
 
   /** Parse a raw BLS v2 batch response for all requested series.
     * (`src/transform.py:33-70`; fixture FIXTURES.md A2.) BLS data arrives
@@ -53,7 +59,7 @@ object Normalize {
           lit(1)).as("date"),
         expr("try_cast(d.value AS double)").as("value"), // "-" -> null
         lit("BLS").as("source"))
-      .orderBy("date", "series_id")
+      .coalesce(1).sortWithinPartitions("date", "series_id")
   }
 
   /** Read one raw JSON document string into a typed single-row frame. */

@@ -2,9 +2,17 @@ package graft.etl
 
 import java.nio.file.Files
 import java.time.{Instant, LocalDate}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSuite
-import graft.ingest.{FileSeriesSource, Fixtures, SeriesSource}
+import graft.ingest.{FileSeriesSource, Fixtures, Normalize, SeriesSource}
 
 /** End-to-end offline pipeline runs against canned payloads in temp dirs —
   * the Spark analog of `/root/reference/tests/test_main.py` +
@@ -104,12 +112,14 @@ class PipelineSpec extends SparkSuite {
         .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
     }
     val blsBefore = partFiles("BLS")
+    assert(blsBefore.size === 1 && partFiles("FRED").size === 1)
     Files.writeString(payloads.resolve("fred_UNRATE.json"),
       Fixtures.fredPayload.replace("\"5.2\"", "\"6.1\""))
     val r = Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
     assert(r.factStats("updated") === 1)
     assert(partFiles("BLS") === blsBefore,
       "BLS partition files must be byte-identical (carried by reference)")
+    assert(partFiles("FRED").size === 1, "a rewritten partition is one file")
     val fred = AtomicTable.read(spark, layout.factPath, graft.model.Schemas.fact)
       .filter("source = 'FRED' AND date = DATE'2024-03-01'").collect()
     assert(fred.head.getDouble(fred.head.fieldIndex("value")) === 6.1)
@@ -176,5 +186,41 @@ class PipelineSpec extends SparkSuite {
       Pipeline.run(spark, badBls, layout2, fredSeries, Fixtures.blsSeriesMap, today, now)
     }
     assert(e.getMessage.contains("extract"))
+  }
+
+  private def factFrame(fredPayload: String): DataFrame =
+    Transforms.combineFactTables(Seq(
+      Normalize.fredObservations(Normalize.readFredJson(spark, fredPayload), "UNRATE", "UNRATE"),
+      Normalize.blsBatch(Normalize.readBlsJson(spark, Fixtures.blsPayload),
+        Fixtures.blsSeriesMap)))
+
+  test("mergeFact evaluates the fact plan once: one collect, at most one write") {
+    val (layout, _) = freshLayout()
+    val actions = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.add(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        actions.add(s"failed $funcName")
+    }
+    def actionsOf(stats: => Map[String, Long]): (Map[String, Long], Seq[String]) = {
+      ListenerBusDrain(spark.sparkContext)
+      actions.clear()
+      val s = stats
+      ListenerBusDrain(spark.sparkContext)
+      (s, actions.asScala.toSeq)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val revised = Fixtures.fredPayload.replace("\"5.2\"", "\"5.9\"")
+      for ((payload, changed) <- Seq(
+          (Fixtures.fredPayload, 9L), (Fixtures.fredPayload, 0L), (revised, 1L))) {
+        val fact = factFrame(payload)
+        val (stats, seen) = actionsOf(Pipeline.mergeFact(spark, fact, layout.factPath))
+        assert(stats("inserted") + stats("updated") === changed)
+        // "command" is the parquet write; an unchanged run writes nothing
+        assert(seen === (if (changed > 0) Seq("collect", "command") else Seq("collect")))
+      }
+    } finally spark.listenerManager.unregister(listener)
   }
 }

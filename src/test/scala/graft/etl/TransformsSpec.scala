@@ -2,10 +2,15 @@ package graft.etl
 
 import java.sql.Date
 
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+
 import graft.SparkSuite
+import graft.ingest.{Fixtures, Normalize}
 import graft.model.SeriesRegistry
 
-class TransformsSpec extends SparkSuite {
+class TransformsSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("buildDimSeries yields 14 rows, FRED before BLS, fixed columns") {
@@ -37,5 +42,21 @@ class TransformsSpec extends SparkSuite {
     assert(out.length === 3)
     assert(out.map(r => (r.getDate(2).toString, r.getString(0))).toSeq ===
       Seq(("2024-01-01", "A"), ("2024-01-01", "B"), ("2024-03-01", "A")))
+  }
+
+  test("combineFactTables over normalized sources: the canonical sort is the only exchange") {
+    val fact = Transforms.combineFactTables(Seq(
+      Normalize.fredObservations(
+        Normalize.readFredJson(spark, Fixtures.fredPayload), "UNRATE", "UNRATE"),
+      Normalize.blsBatch(Normalize.readBlsJson(spark, Fixtures.blsPayload),
+        Fixtures.blsSeriesMap)))
+    val plan = fact.queryExecution.executedPlan
+    val exchanges = collect(plan) { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size <= 1 &&
+      exchanges.forall(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+      s"per-source sorts must stay local:\n$plan")
+    val dates = Seq("2024-01-01", "2024-02-01", "2024-03-01")
+    assert(fact.collect().map(r => (r.getDate(2).toString, r.getString(0))).toSeq ===
+      dates.flatMap(d => Seq(d -> "CES0500000003", d -> "CUUR0000SA0", d -> "UNRATE")))
   }
 }

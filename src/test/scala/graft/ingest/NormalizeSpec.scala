@@ -1,6 +1,11 @@
 package graft.ingest
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
 import graft.SparkSuite
+import graft.model.Schemas
 
 /** Port of the reference's transform tests
   * (`/root/reference/tests/test_transform.py`) against the Spark
@@ -65,5 +70,46 @@ class NormalizeSpec extends SparkSuite {
     val df = Normalize.blsBatch(
       Normalize.readBlsJson(spark, Fixtures.blsMissingPayload), Fixtures.blsSeriesMap)
     assert(df.collect().head.isNullAt(3))
+  }
+
+  /** One raw document per entry, range-partitioned newest-first into 3
+    * partitions, so the exploded rows arrive out of order across
+    * partitions. */
+  private def scattered(docs: Seq[String], schema: StructType, key: Column): DataFrame = {
+    import spark.implicits._
+    spark.read.schema(schema).json(docs.toDS).repartitionByRange(3, key.desc)
+  }
+
+  private def arrival(raw: DataFrame, dates: Column): Seq[String] = {
+    assert(raw.select(spark_partition_id()).distinct().count() === 3)
+    raw.select(explode(dates)).collect().map(_.getString(0)).toSeq
+  }
+
+  test("T10: a multi-partition raw frame still comes out in total oldest-first order") {
+    val fredRaw = scattered(
+      Seq("2024-03-01" -> "5.2", "2024-02-01" -> ".", "2024-01-01" -> "5.0").map {
+        case (d, v) => s"""{"observations": [{"date": "$d", "value": "$v"}]}"""
+      },
+      Schemas.fredResponse, col("observations")(0)("date"))
+    val fredArrival = arrival(fredRaw, col("observations.date"))
+    assert(fredArrival !== fredArrival.sorted, "precondition: rows arrive out of order")
+    val fredRows = Normalize.fredObservations(fredRaw, "UNRATE", "UNRATE").collect()
+    assert(fredRows.map(_.getDate(2).toString).toSeq ===
+      Seq("2024-01-01", "2024-02-01", "2024-03-01"))
+
+    val blsRaw = scattered(
+      Seq("M03", "M02", "M01").map { p =>
+        s"""{"status": "REQUEST_SUCCEEDED", "Results": {"series": [
+           |  {"seriesID": "CUUR0000SA0", "data": [{"year": "2024", "period": "$p", "value": "1"}]},
+           |  {"seriesID": "CES0500000003", "data": [{"year": "2024", "period": "$p", "value": "2"}]}
+           |]}}""".stripMargin
+      },
+      Schemas.blsResponse, col("Results.series")(0)("data")(0)("period"))
+    val blsArrival = arrival(blsRaw, col("Results.series")(0)("data")("period"))
+    assert(blsArrival !== blsArrival.sorted, "precondition: rows arrive out of order")
+    val blsRows = Normalize.blsBatch(blsRaw, Fixtures.blsSeriesMap).collect()
+      .map(r => r.getDate(2).toString -> r.getString(0)).toSeq
+    assert(blsRows === Seq("2024-01-01", "2024-02-01", "2024-03-01")
+      .flatMap(d => Seq(d -> "CES0500000003", d -> "CUUR0000SA0")))
   }
 }
