@@ -15,7 +15,9 @@ import graft.model.Schemas.ExtractionState
 /** The 3-phase pipeline driver (O1-O3, `/root/reference/src/main.py:18-74`)
   * re-expressed Spark-first: extract is driver-side HTTP + raw-zone
   * snapshots + state commits; transform builds one lazy fact plan
-  * (explode → cast → union → sort) with no action; load evaluates it
+  * (explode → cast → union → sort) with no action, normalizing every FRED
+  * response of the run as one batch frame ([[Normalize.fredBatch]]) so
+  * the plan does not grow with the number of series; load evaluates it
   * exactly once, as the persisted classification of [[mergeFact]] that
   * feeds both the run report and the partition rewrite. Phase failures
   * abort the run with a phase-tagged error; a single bad FRED series is
@@ -121,18 +123,31 @@ object Pipeline {
     } finally classified.unpersist()
   }
 
-  /** Dim load: insert-if-absent, append-only (`src/load.py:108-134`). */
+  /** Dim load: insert-if-absent, append-only (`src/load.py:108-134`).
+    * Each incoming row is flagged present or absent once, and the flagged
+    * frame is persisted: one collect of the flags yields both figures, and
+    * the append reads the absent rows back from the same cache. The dim
+    * holds one row per configured series, so its keys are deduplicated in
+    * one task, with no exchange, and the flags are few enough to collect. */
   def mergeDim(spark: SparkSession, incoming: DataFrame, dimPath: String): Map[String, Long] = {
     val exists = Files.exists(Paths.get(dimPath))
     val existing =
       if (exists) spark.read.schema(Schemas.dim).parquet(dimPath)
       else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         Schemas.dim)
-    val newRows = Merge.insertIfAbsent(incoming, existing, Seq("series_id")).cache()
-    val inserted = newRows.count()
-    if (inserted > 0) newRows.write.mode(SaveMode.Append).parquet(dimPath)
-    newRows.unpersist()
-    Map("inserted" -> inserted, "unchanged" -> (incoming.count() - inserted))
+    val present = existing.select(col("series_id"), lit(true).as("_present"))
+      .coalesce(1).distinct()
+    val flagged = incoming.join(present, Seq("series_id"), "left_outer")
+      .withColumn("_present", col("_present").isNotNull)
+      .persist()
+    try {
+      val flags = flagged.select("_present").collect().map(_.getBoolean(0))
+      val inserted = flags.count(!_).toLong
+      if (inserted > 0)
+        flagged.filter(!col("_present")).drop("_present")
+          .write.mode(SaveMode.Append).parquet(dimPath)
+      Map("inserted" -> inserted, "unchanged" -> (flags.length - inserted))
+    } finally flagged.unpersist()
   }
 
   private def deleteRecursively(p: Path): Unit = {
@@ -176,11 +191,9 @@ object Pipeline {
     // Phase 2: transform (lazy plan construction only)
     val (fact, dim) =
       try {
-        val fredFrames = fredJsons.map { case (id, name, json) =>
-          Normalize.fredObservations(Normalize.readFredJson(spark, json), id, name)
-        }
+        val fredFrame = Normalize.fredBatch(spark, fredJsons)
         val blsFrame = Normalize.blsBatch(Normalize.readBlsJson(spark, blsJson), blsSeries)
-        val fact = Transforms.combineFactTables(fredFrames :+ blsFrame)
+        val fact = Transforms.combineFactTables(Seq(fredFrame, blsFrame))
         val dim = Transforms.buildDimSeries(spark, fredSeries, blsSeries)
         (fact, dim)
       } catch {

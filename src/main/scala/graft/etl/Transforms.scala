@@ -21,11 +21,13 @@ object Transforms {
   }
 
   /** T12: n-ary union of per-source fact frames + re-sort oldest-first.
-    * In Spark the unions fuse into one plan node; the per-source frames
-    * sort locally ([[graft.ingest.Normalize]] T10), so this sort's range
-    * exchange is the only exchange. When every input is one partition,
-    * as normalized responses are, the union stays one partition and the
-    * sort needs no exchange at all. Empty frames union fine
+    * In Spark the unions fuse into one plan node, and no input adds an
+    * exchange of its own ([[graft.ingest.Normalize]] sorts per document
+    * locally, and its FRED batch does not sort), so this sort's range
+    * exchange is the only exchange. It needs none only when every input
+    * is one partition, as per-document normalized frames are; the
+    * pipeline's FRED batch is a multi-partition local scan, so there the
+    * range exchange runs. Empty frames union fine
     * (`tests/test_transform.py:213-218`). */
   def combineFactTables(frames: Seq[DataFrame]): DataFrame = {
     require(frames.nonEmpty, "combineFactTables needs at least one frame")

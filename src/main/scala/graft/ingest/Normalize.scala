@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
@@ -16,28 +16,51 @@ import graft.model.Schemas
   * whole-stage codegen and Catalyst prunes the unused raw fields at the
   * scan.
   *
-  * T10 is a local sort: a raw response is one JSON document, so its
-  * exploded rows already sit in one partition, and `coalesce(1)` plus
-  * `sortWithinPartitions` gives the same total order as a global sort
-  * without a range exchange or its sampling job. `coalesce(1)` keeps the
-  * order total when a caller hands in a multi-partition raw frame.
+  * FRED has two entry points over one T2–T5 column list: the per-document
+  * API ([[readFredJson]] + [[fredObservations]], one frame per response)
+  * and [[fredBatch]], which parses every response of a run in one plan, so
+  * the plan does not grow with the number of series.
+  *
+  * T10 is a property of the per-document API: a raw response is one JSON
+  * document, so its exploded rows already sit in one partition, and
+  * `coalesce(1)` plus `sortWithinPartitions` gives the same total order as
+  * a global sort without a range exchange or its sampling job.
+  * `coalesce(1)` keeps the order total when a caller hands in a
+  * multi-partition raw frame. [[fredBatch]] does not sort: its rows are
+  * ordered by T12's canonical sort ([[graft.etl.Transforms.combineFactTables]]).
   */
 object Normalize {
 
   val factColumns: Seq[String] =
     Seq("series_id", "series_name", "date", "value", "source")
 
+  /** T2–T5 over one exploded FRED observation `o`, shared by both entry
+    * points. */
+  private def fredColumns(seriesId: Column, seriesName: Column): Seq[Column] = Seq(
+    seriesId.as("series_id"),
+    seriesName.as("series_name"),
+    to_date(col("o.date"), "yyyy-MM-dd").as("date"),
+    expr("try_cast(o.value AS double)").as("value"), // "." -> null
+    lit("FRED").as("source"))
+
   /** Parse a raw FRED `series/observations` response.
     * (`src/transform.py:4-30`; fixture FIXTURES.md A1.) */
   def fredObservations(raw: DataFrame, seriesId: String, seriesName: String): DataFrame =
     raw.select(explode(col("observations")).as("o"))
-      .select(
-        lit(seriesId).as("series_id"),
-        lit(seriesName).as("series_name"),
-        to_date(col("o.date"), "yyyy-MM-dd").as("date"),
-        expr("try_cast(o.value AS double)").as("value"), // "." -> null
-        lit("FRED").as("source"))
+      .select(fredColumns(lit(seriesId), lit(seriesName)): _*)
       .coalesce(1).sortWithinPartitions("date")
+
+  /** Parse every FRED response of a run, given as `(seriesId, seriesName,
+    * json)`, in one plan: a local frame of the documents, `from_json` and
+    * a single explode. Rows equal the union of the per-document
+    * [[fredObservations]] frames; their order is left to T12. */
+  def fredBatch(spark: SparkSession, docs: Seq[(String, String, String)]): DataFrame = {
+    import spark.implicits._
+    docs.toDF("series_id", "series_name", "json")
+      .select(col("series_id"), col("series_name"),
+        explode(from_json(col("json"), Schemas.fredResponse)("observations")).as("o"))
+      .select(fredColumns(col("series_id"), col("series_name")): _*)
+  }
 
   /** Parse a raw BLS v2 batch response for all requested series.
     * (`src/transform.py:33-70`; fixture FIXTURES.md A2.) BLS data arrives

@@ -194,8 +194,9 @@ class PipelineSpec extends SparkSuite {
       Normalize.blsBatch(Normalize.readBlsJson(spark, Fixtures.blsPayload),
         Fixtures.blsSeriesMap)))
 
-  test("mergeFact evaluates the fact plan once: one collect, at most one write") {
-    val (layout, _) = freshLayout()
+  /** The result of `body` and the actions it ran, by the function names a
+    * `QueryExecutionListener` sees ("command" is a parquet write). */
+  private def actionsOf[T](body: => T): (T, Seq[String]) = {
     val actions = new ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -203,24 +204,49 @@ class PipelineSpec extends SparkSuite {
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
         actions.add(s"failed $funcName")
     }
-    def actionsOf(stats: => Map[String, Long]): (Map[String, Long], Seq[String]) = {
-      ListenerBusDrain(spark.sparkContext)
-      actions.clear()
-      val s = stats
-      ListenerBusDrain(spark.sparkContext)
-      (s, actions.asScala.toSeq)
-    }
+    ListenerBusDrain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
-      val revised = Fixtures.fredPayload.replace("\"5.2\"", "\"5.9\"")
-      for ((payload, changed) <- Seq(
-          (Fixtures.fredPayload, 9L), (Fixtures.fredPayload, 0L), (revised, 1L))) {
-        val fact = factFrame(payload)
-        val (stats, seen) = actionsOf(Pipeline.mergeFact(spark, fact, layout.factPath))
-        assert(stats("inserted") + stats("updated") === changed)
-        // "command" is the parquet write; an unchanged run writes nothing
-        assert(seen === (if (changed > 0) Seq("collect", "command") else Seq("collect")))
-      }
+      val result = body
+      ListenerBusDrain(spark.sparkContext)
+      (result, actions.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("mergeFact evaluates the fact plan once: one collect, at most one write") {
+    val (layout, _) = freshLayout()
+    val revised = Fixtures.fredPayload.replace("\"5.2\"", "\"5.9\"")
+    for ((payload, changed) <- Seq(
+        (Fixtures.fredPayload, 9L), (Fixtures.fredPayload, 0L), (revised, 1L))) {
+      val fact = factFrame(payload)
+      val (stats, seen) = actionsOf(Pipeline.mergeFact(spark, fact, layout.factPath))
+      assert(stats("inserted") + stats("updated") === changed)
+      // an unchanged run writes nothing
+      assert(seen === (if (changed > 0) Seq("collect", "command") else Seq("collect")))
+    }
+  }
+
+  test("mergeDim classifies once: one collect, at most one write") {
+    val (layout, _) = freshLayout()
+    def dim(fred: Seq[(String, String)]) =
+      Transforms.buildDimSeries(spark, fred, Fixtures.blsSeriesMap)
+    for ((fred, expected, writes) <- Seq(
+        (fredSeries, Map("inserted" -> 3L, "unchanged" -> 0L), true),
+        (fredSeries, Map("inserted" -> 0L, "unchanged" -> 3L), false),
+        (fredSeries :+ ("GDP" -> "GDP"), Map("inserted" -> 1L, "unchanged" -> 3L), true))) {
+      val (stats, seen) = actionsOf(Pipeline.mergeDim(spark, dim(fred), layout.dimPath))
+      assert(stats === expected)
+      assert(seen === (if (writes) Seq("collect", "command") else Seq("collect")))
+    }
+    assert(spark.read.parquet(layout.dimPath).count() === 4)
+
+    // a series configured twice is stored twice; each incoming row still
+    // counts once
+    val (twice, _) = freshLayout()
+    val doubled = dim(fredSeries ++ fredSeries)
+    assert(Pipeline.mergeDim(spark, doubled, twice.dimPath) ===
+      Map("inserted" -> 4L, "unchanged" -> 0L))
+    assert(Pipeline.mergeDim(spark, doubled, twice.dimPath) ===
+      Map("inserted" -> 0L, "unchanged" -> 4L))
   }
 }

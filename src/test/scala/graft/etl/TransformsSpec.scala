@@ -2,7 +2,9 @@ package graft.etl
 
 import java.sql.Date
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
@@ -58,5 +60,23 @@ class TransformsSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     val dates = Seq("2024-01-01", "2024-02-01", "2024-03-01")
     assert(fact.collect().map(r => (r.getDate(2).toString, r.getString(0))).toSeq ===
       dates.flatMap(d => Seq(d -> "CES0500000003", d -> "CUUR0000SA0", d -> "UNRATE")))
+  }
+
+  test("the fact plan Pipeline.run builds does not grow with the number of FRED series") {
+    def fact(series: Int): DataFrame = Transforms.combineFactTables(Seq(
+      Normalize.fredBatch(spark,
+        (1 to series).map(i => (s"S$i", s"Series $i", Fixtures.fredPayload))),
+      Normalize.blsBatch(Normalize.readBlsJson(spark, Fixtures.blsPayload),
+        Fixtures.blsSeriesMap)))
+    def shape(series: Int): (Int, Int) = {
+      val df = fact(series)
+      assert(df.collect().length === 3 * series + 6)
+      (df.queryExecution.optimizedPlan.collect { case p => p }.size,
+        collect(df.queryExecution.executedPlan) { case s: WholeStageCodegenExec => s }.size)
+    }
+    val (small, large) = (shape(2), shape(20))
+    assert(small._2 > 0, "precondition: the executed plan has codegen stages")
+    assert(large === small,
+      "(optimized plan nodes, whole-stage codegen stages) for 20 series vs 2")
   }
 }

@@ -72,6 +72,26 @@ class NormalizeSpec extends SparkSuite {
     assert(df.collect().head.isNullAt(3))
   }
 
+  test("fredBatch: rows equal the union of the per-document frames; same column contract") {
+    val docs = Seq(
+      ("UNRATE", "Unemployment Rate", Fixtures.fredPayload), // carries a "." marker
+      ("EMPTY", "Empty", """{"count": 0, "observations": []}"""),
+      ("NOKEY", "No observations", """{"realtime_start": "2024-01-01", "count": 0}"""),
+      ("GDP", "GDP", Fixtures.fredPayload.replace("\"5.0\"", "\"7.5\"")))
+    val batch = Normalize.fredBatch(spark, docs)
+    val perDoc = docs.map { case (id, name, json) =>
+      Normalize.fredObservations(Normalize.readFredJson(spark, json), id, name)
+    }.reduce(_ unionByName _)
+    assert(batch.columns.toSeq === Normalize.factColumns)
+    assert(batch.schema.map(f => f.name -> f.dataType) ===
+      perDoc.schema.map(f => f.name -> f.dataType))
+    def multiset(df: DataFrame): Map[Seq[Any], Int] =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.size }
+    val expected = multiset(perDoc)
+    assert(expected.values.sum === 6, "precondition: two documents carry rows")
+    assert(multiset(batch) === expected)
+  }
+
   /** One raw document per entry, range-partitioned newest-first into 3
     * partitions, so the exploded rows arrive out of order across
     * partitions. */
