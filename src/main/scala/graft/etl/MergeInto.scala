@@ -294,8 +294,12 @@ object MergeInto {
     val txn = s"txn-${java.util.UUID.randomUUID().toString.take(12)}"
     val txnDir = root.resolve("data").resolve(txn)
     // one vector file per partition (repartition, not coalesce — a
-    // coalesce(1) would also strangle the locate scan upstream of it)
-    keyFrame.repartition(pcols.map(col): _*)
+    // coalesce(1) would also strangle the locate scan upstream of it).
+    // Keys are stored at the table's DECLARED types, the types the graft
+    // scan decodes them at, whatever the types of `keys`.
+    keyFrame.select(keyFrame.columns.map(c =>
+        col(c).cast(schema(c).dataType).as(c)): _*)
+      .repartition(pcols.map(col): _*)
       .write.partitionBy(pcols: _*).parquet(txnDir.toString)
     val written = AtomicTable.stagedPartitionDirs(txnDir, txn, pcols)
     if (written.isEmpty) // nothing matched: no version burned

@@ -25,11 +25,6 @@ object TextStats {
     "es" -> Seq("el", "los", "las", "y", "un", "una"),
     "zh" -> Seq("的", "是", "了", "在", "我", "有"))
 
-  /** Count of tokens that appear in `words` (duplicates counted — this is
-    * a per-token membership filter, not a set intersection). */
-  def stopwordHits(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => array_contains(typedlit(words), t)))
-
   /** The one-pass signals array (graft.functions.TextExprs.TextSignals)
     * over the `text` column — the codegen'd substrate for quality/langid/
     * gopher/funnel (their composed-built-in forms pay an interpreted

@@ -52,8 +52,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Delete vectors are NOT handled here: a scan over a table with any
   * outstanding vectors plans row-based ([[GraftReaderFactory]] decides
   * per scan — Spark forbids mixing columnar and row partitions in one
-  * scan). The maintenance contract folds vectors, so steady-state scans
-  * are vector-free and columnar. */
+  * scan), and [[GraftVectorizedRowReader]] subtracts them per row over
+  * this reader's batches. The maintenance contract folds vectors, so
+  * steady-state scans are vector-free and columnar. */
 private[sources] class GraftColumnarPartitionReader(
     part: GraftInputPartition, required: StructType,
     renames: Map[String, Seq[String]],
@@ -64,8 +65,9 @@ private[sources] class GraftColumnarPartitionReader(
 
   private val conf = GraftColumnar.readerConf()
 
-  // required index -> typed partition-level constant (same name-based
-  // resolution and typed-constant contract as GraftPartitionReader)
+  // required index -> typed partition-level constant, resolved by NAME
+  // from the manifest's own key form: with schema evolution, "not
+  // present in the files" no longer identifies a partition column
   private val partValueAt: Map[Int, Any] = {
     val values = part.partValues
     part.partitionCols.zipWithIndex.flatMap { case (c, lvl) =>
@@ -133,7 +135,7 @@ private[sources] class GraftColumnarPartitionReader(
     // column under its alias-resolved FILE-side name (absent names stay
     // requested under the current name — the reader null-fills them,
     // the ADD-COLUMN contract). CDF constants only apply to fields the
-    // file itself cannot answer, same precedence as the row reader.
+    // file itself cannot answer.
     val fileFields = Seq.newBuilder[StructField]
     val innerIdxAt = new Array[Int](required.length)
     var k = 0
@@ -155,7 +157,7 @@ private[sources] class GraftColumnarPartitionReader(
     val ctx = new TaskAttemptContextImpl(c,
       new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0))
     // rebase CORRECTED on both counts: graft files are modern-written
-    // (no ancient-calendar rebase), matching the row reader's raw reads
+    // (no ancient-calendar rebase), so values read back as stored
     inner = new VectorizedParquetRecordReader(null, "CORRECTED", "UTC",
       "CORRECTED", "UTC", GraftColumnar.OffHeap, GraftColumnar.Capacity)
     inner.initialize(split, ctx, Some(inputFile), None, Some(footer))
@@ -203,16 +205,11 @@ private[sources] object GraftColumnar {
   val Capacity = 4096
   val OffHeap = false
 
-  /** Operational kill switch (JVM property `graft.scan.columnar=false`)
-    * — forces every scan back to the row reader; also the "before"
-    * lever for the columnar-vs-row throughput measurement. */
-  def enabled: Boolean =
-    !"false".equalsIgnoreCase(System.getProperty("graft.scan.columnar", "true"))
-
   /** Can the vectorized reader produce `dt`? Everything the engine
-    * declares today qualifies (atomic + nested-of-atomic); unknown or
-    * exotic types (interval, UDT, variant) fall back to the row reader
-    * for the WHOLE scan — columnar-vs-row is a per-scan decision. */
+    * declares today qualifies (atomic + nested-of-atomic). A scan that
+    * needs any other type (interval, UDT, variant) plans row-based —
+    * columnar-vs-row is a per-scan decision — and its reader rejects
+    * the type. */
   def vectorizable(dt: DataType): Boolean = dt match {
     case BooleanType | ByteType | ShortType | IntegerType | LongType |
         FloatType | DoubleType | StringType | BinaryType | DateType |
@@ -221,19 +218,6 @@ private[sources] object GraftColumnar {
     case ArrayType(e, _) => vectorizable(e)
     case s: StructType => s.fields.forall(f => vectorizable(f.dataType))
     case MapType(kt, vt, _) => vectorizable(kt) && vectorizable(vt)
-    case _ => false
-  }
-
-  /** Delete-key types whose [[GraftPartitionReader.rawValue]] raw form
-    * is exactly recoverable from a catalyst column vector — the gate
-    * for the vectorized row path over a DV-carrying partition.
-    * Decimals are excluded (their raw form depends on the file's
-    * physical width); short/byte are excluded (stored INT32, raw form
-    * is Int, but a catalyst Short/Byte vector renders Short/Byte). */
-  def simpleKeyType(dt: DataType): Boolean = dt match {
-    case BooleanType | IntegerType | DateType | LongType | TimestampType |
-        TimestampNTZType | FloatType | DoubleType | StringType |
-        BinaryType => true
     case _ => false
   }
 

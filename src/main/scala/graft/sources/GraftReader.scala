@@ -1,21 +1,9 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
-import org.apache.parquet.schema.LogicalTypeAnnotation.{DecimalLogicalTypeAnnotation, TimestampLogicalTypeAnnotation}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** `columnar` is a PER-SCAN decision made by the planner (Spark forbids
   * mixing columnar and row input partitions in one scan): true only
@@ -35,24 +23,13 @@ private[sources] class GraftReaderFactory(required: StructType,
   // bleeding into the OTHER scan of a zero-exchange join task
   @transient private lazy val taskCtr = new GraftTaskDecodeCounters.Holder
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val gp = p.asInstanceOf[GraftInputPartition]
-    // the ROW path still decodes VECTORIZED whenever it can: a scan
-    // plans row-based because SOME partition carries delete vectors
-    // (or the kill switch fired), but each partition independently
-    // keeps the columnar decode — DV subtraction probes the batch's
-    // key vectors per row. Per-partition fallback to the Group reader
-    // only for non-vectorizable required types or delete-key types
-    // whose raw probe form a catalyst vector cannot render.
-    val vectorized = GraftColumnar.enabled &&
-      required.fields.forall(f => GraftColumnar.vectorizable(f.dataType)) &&
-      (gp.vectorFiles.isEmpty ||
-        gp.keyCols.forall(c =>
-          colTypes.get(c).exists(GraftColumnar.simpleKeyType)))
-    if (vectorized)
-      new GraftVectorizedRowReader(gp, required, renames, colTypes, taskCtr)
-    else new GraftPartitionReader(gp, required, renames, taskCtr)
-  }
+  // the ROW path decodes VECTORIZED too: a scan plans row-based because
+  // SOME partition carries delete vectors (or it is a stream scan), and
+  // every partition keeps the columnar decode — DV subtraction probes
+  // the batch's key vectors per row
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new GraftVectorizedRowReader(p.asInstanceOf[GraftInputPartition],
+      required, renames, colTypes, taskCtr)
   override def supportColumnarReads(p: InputPartition): Boolean = columnar
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -63,237 +40,14 @@ private[sources] class GraftReaderFactory(required: StructType,
   }
 }
 
-/** Streams one table partition's parquet rows, applying its deletion
-  * vectors from an in-memory key set (vectors are small by the
-  * maintenance contract — materializeDeletes folds them). `renames`
-  * maps each current column name to its historical names (newest
-  * first): files written before an ALTER ... RENAME COLUMN keep the
-  * old parquet field name forever, and the reader resolves the
-  * declared name to whichever alias the file actually carries —
-  * metadata-only evolution, zero files rewritten. */
-private[sources] class GraftPartitionReader(part: GraftInputPartition,
-    required: StructType,
-    renames: Map[String, Seq[String]] = Map.empty,
-    ctr: GraftTaskDecodeCounters.Holder = new GraftTaskDecodeCounters.Holder)
-    extends PartitionReader[InternalRow] {
-
-  private val conf = new Configuration()
-  // resolved by NAME from the manifest's own key form: with schema
-  // evolution, "not present in the files" no longer identifies it —
-  // evolved columns are also absent from pre-evolution files. One
-  // typed constant per partition LEVEL present in the read schema.
-  private lazy val partValueAt: Map[Int, Any] = {
-    val values = part.partValues
-    part.partitionCols.zipWithIndex.flatMap { case (c, lvl) =>
-      val i = required.fieldNames.indexOf(c)
-      if (i < 0) None
-      else Some(i -> (required(i).dataType match {
-        case StringType => UTF8String.fromString(values(lvl))
-        case LongType => values(lvl).toLong
-        case IntegerType => values(lvl).toInt
-        case DateType => // internal form: days since epoch
-          java.time.LocalDate.parse(values(lvl)).toEpochDay.toInt
-        case other => throw new IllegalArgumentException(
-          s"unsupported partition column type $other")
-      }))
-    }.toMap
-  }
-  /** The candidate parquet field names for key column `c`, newest
-    * first: the declared name, then its historical aliases. Delete-key
-    * columns are renameable once vectors are folded, so PRE-RENAME data
-    * files keep the key under its old field name forever — the probe
-    * must resolve per FILE exactly like the data columns do. */
-  private def keyAliases(c: String): Seq[String] =
-    c +: renames.getOrElse(c, Nil)
-
-  // deleted-key set: tuples of the key columns' raw values. Vector
-  // files are written at delete time under the THEN-current key names;
-  // the rename contract folds vectors first, so current names match —
-  // but resolve through the alias chain anyway (same code path as the
-  // data side, and robust to a vector retained across a later rename).
-  // CACHED process-wide per (vector files, key cols): every SPLIT of a
-  // partition shares the same vectors, and one split per data file
-  // means a 100-file partition would otherwise re-read them 100 times
-  // per scan (100 object-store GETs each at scale). Vector dirs are
-  // immutable once committed, so the cache can never go stale.
-  private val deleted: java.util.HashSet[Seq[Any]] =
-    GraftPartitionReader.deletedKeysFor(part, renames)
-
-  private val files = part.dataFiles.iterator
-  private var reader: org.apache.parquet.hadoop.ParquetReader[Group] = _
-  private var fieldIdx: Map[String, Int] = Map.empty
-  /** required column name -> THIS file's name for it: the column
-    * itself, or (pre-rename files) the newest historical alias the
-    * file carries. Absent = the file predates the column entirely
-    * (null fill). Resolved per FILE from its own footer — a split (or
-    * a streaming batch) may mix files from before and after a rename. */
-  private var resolvedName: Map[String, String] = Map.empty
-  /** key column -> THIS file's field name for it (alias-resolved like
-    * [[resolvedName]], but for the delete-key probe — key columns need
-    * not be in `required`). Absent = the file predates the key column
-    * (probes as null, the ADD-COLUMN contract below). */
-  private var resolvedKey: Map[String, String] = Map.empty
-  private var current: InternalRow = _
-
-  private def openNext(): Boolean = {
-    if (reader != null) { reader.close(); reader = null }
-    if (!files.hasNext) return false
-    val path = new Path(files.next())
-    val footer = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-    val fileSchema = try footer.getFooter.getFileMetaData.getSchema
-      finally footer.close()
-    val names = fileSchema.getFields.asScala.map(_.getName).toSet
-    resolvedName = required.fieldNames.iterator.flatMap { c =>
-      (c +: renames.getOrElse(c, Nil)).find(names.contains).map(c -> _)
-    }.toMap
-    resolvedKey = part.keyCols.iterator.flatMap { c =>
-      keyAliases(c).find(names.contains).map(c -> _)
-    }.toMap
-    // columns the parquet reader must materialize: the required file
-    // columns (under their FILE-side names), plus key columns while
-    // vectors are outstanding — under THIS FILE's names for them
-    // (pre-rename files carry a renamed delete key under its old field
-    // name); a fully column-pruned scan (count(*)) still projects ONE
-    // column so row multiplicity survives the reader
-    val req = required.fieldNames.toSeq.flatMap(resolvedName.get).distinct
-    val withKeys = if (deleted.isEmpty) req
-      else (req ++ part.keyCols.flatMap(resolvedKey.get)).distinct
-    val fileCols = if (withKeys.nonEmpty) withKeys else Seq(names.min)
-    val projected = projectSchema(fileSchema, fileCols)
-    val c = new Configuration()
-    c.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      projected.toString)
-    reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new GroupReadSupport(), path).withConf(c).build()
-    fieldIdx = projected.getFields.asScala.zipWithIndex
-      .map { case (f, i) => f.getName -> i }.toMap
-    true
-  }
-
-  private def projectSchema(file: MessageType, cols: Seq[String]): MessageType =
-    GraftPartitionReader.projectSchema(file, cols)
-
-  private def rawValue(g: Group, i: Int): Any =
-    GraftPartitionReader.rawValue(g, i)
-
-  /** Catalyst value for required field `name` from the group. */
-  private def catalystValue(g: Group, name: String, dt: DataType): Any = {
-    val i = fieldIdx(name)
-    if (g.getFieldRepetitionCount(i) == 0) return null
-    val t = g.getType.getType(i).asPrimitiveType()
-    (t.getPrimitiveTypeName, dt) match {
-      case (BOOLEAN, BooleanType) => g.getBoolean(i, 0)
-      case (INT32, DateType) => g.getInteger(i, 0)
-      case (INT32, IntegerType) => g.getInteger(i, 0)
-      // the parquet-compatible widenings (readEvolved's cast contract)
-      case (INT32, LongType) => g.getInteger(i, 0).toLong
-      case (FLOAT, DoubleType) => g.getFloat(i, 0).toDouble
-      case (INT64, TimestampType) | (INT64, TimestampNTZType) =>
-        t.getLogicalTypeAnnotation match {
-          case ts: TimestampLogicalTypeAnnotation
-            if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS =>
-            g.getLong(i, 0) * 1000L
-          case _ => g.getLong(i, 0) // MICROS (Spark's default unit)
-        }
-      case (INT64, LongType) => g.getLong(i, 0)
-      case (FLOAT, FloatType) => g.getFloat(i, 0)
-      case (DOUBLE, DoubleType) => g.getDouble(i, 0)
-      case (INT96, TimestampType) =>
-        // 12-byte legacy: nanos-of-day little-endian + julian day
-        val b = java.nio.ByteBuffer.wrap(g.getInt96(i, 0).getBytes)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val nanosOfDay = b.getLong
-        val julianDay = b.getInt
-        (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-      case (BINARY, StringType) =>
-        UTF8String.fromBytes(g.getBinary(i, 0).getBytes)
-      case (BINARY, BinaryType) => g.getBinary(i, 0).getBytes
-      // DECIMAL storage forms (Spark's parquet writer): unscaled INT32
-      // for precision <= 9, INT64 <= 18, big-endian fixed bytes above
-      case (INT32, d: DecimalType) =>
-        org.apache.spark.sql.types.Decimal(
-          java.math.BigDecimal.valueOf(g.getInteger(i, 0).toLong, d.scale),
-          d.precision, d.scale)
-      case (INT64, d: DecimalType) =>
-        org.apache.spark.sql.types.Decimal(
-          java.math.BigDecimal.valueOf(g.getLong(i, 0), d.scale),
-          d.precision, d.scale)
-      case (BINARY | FIXED_LEN_BYTE_ARRAY, d: DecimalType) =>
-        org.apache.spark.sql.types.Decimal(
-          new java.math.BigDecimal(
-            new java.math.BigInteger(g.getBinary(i, 0).getBytes), d.scale),
-          d.precision, d.scale)
-      case (pt, st) => throw new IllegalArgumentException(
-        s"unsupported ($pt -> $st) for column $name")
-    }
-  }
-
-  override def next(): Boolean = {
-    while (true) {
-      if (reader == null && !openNext()) return false
-      val g = reader.read()
-      if (g == null) {
-        if (!openNext()) return false
-      } else {
-        // key columns probe through the file-side ALIAS-RESOLVED name
-        // (pre-rename files store a renamed key under its old field
-        // name) with a null fill: a vector keyed on a column ADDED
-        // after this partition's files were written must compare that
-        // key as null (the same contract the data columns use below),
-        // not crash on Map.apply
-        val isDeleted = !deleted.isEmpty &&
-          deleted.contains(part.keyCols.map(c =>
-            resolvedKey.get(c).flatMap(fieldIdx.get)
-              .map(rawValue(g, _)).orNull))
-        if (isDeleted) ctr.dv += 1
-        if (!isDeleted) {
-          ctr.grpRow += 1
-          val row = new GenericInternalRow(required.length)
-          var j = 0
-          while (j < required.length) {
-            val f = required(j)
-            val fileName = resolvedName.get(f.name)
-            if (partValueAt.contains(j)) row.update(j, partValueAt(j))
-            else if (fileName.exists(fieldIdx.contains))
-              row.update(j, catalystValue(g, fileName.get, f.dataType))
-            // change-feed scans surface per-commit constants
-            else if (part.changeVersion.isDefined &&
-                f.name == graft.etl.ChangeFeed.ChangeTypeCol)
-              row.update(j, org.apache.spark.unsafe.types.UTF8String
-                .fromString("insert"))
-            else if (part.changeVersion.isDefined &&
-                f.name == graft.etl.ChangeFeed.CommitVersionCol)
-              row.update(j, part.changeVersion.get)
-            // schema evolution: a required column this partition's files
-            // predate reads as NULL (the readEvolved contract)
-            else row.update(j, null)
-            j += 1
-          }
-          current = row
-          return true
-        }
-      }
-    }
-    false
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = if (reader != null) reader.close()
-
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    ctr.values
-}
-
 /** Row-emitting reader over the VECTORIZED decode: batches come from a
   * [[GraftColumnarPartitionReader]] over (required ++ the partition's
   * delete-key columns), delete-vector subtraction probes the key
   * column vectors per row, and surviving rows hand out as the batch's
-  * mutable row view restricted to the required width. This is what a
-  * DV-carrying partition reads through when its key types allow: the
-  * decode stays columnar (the r14 3x leaf win) even though the scan
-  * reports rows — Spark forbids mixing columnar and row partitions in
-  * one scan, and a ColumnarBatch cannot subtract keys. */
+  * mutable row view restricted to the required width. This is what
+  * every row-based scan reads through: the decode stays columnar even
+  * though the scan reports rows — Spark forbids mixing columnar and row
+  * partitions in one scan, and a ColumnarBatch cannot subtract keys. */
 private[sources] class GraftVectorizedRowReader(part: GraftInputPartition,
     required: StructType, renames: Map[String, Seq[String]],
     colTypes: Map[String, DataType],
@@ -309,11 +63,16 @@ private[sources] class GraftVectorizedRowReader(part: GraftInputPartition,
   private val extended = StructType(required.fields ++ extraKeys)
   private val inner =
     new GraftColumnarPartitionReader(part, extended, renames, countRows = false)
-  private val deleted = GraftPartitionReader.deletedKeysFor(part, renames)
   private val keyOrds: Array[Int] =
     if (part.vectorFiles.isEmpty) Array.empty
     else part.keyCols.map(extended.fieldNames.indexOf(_)).toArray
-  private val keyTypes: Array[DataType] = keyOrds.map(extended(_).dataType)
+  private val deleted = GraftVectorizedRowReader.deletedKeysFor(part,
+    StructType(keyOrds.map(i => StructField(extended(i).name,
+      extended(i).dataType))), renames)
+  // the probe renders a batch row's key tuple in the SAME UnsafeRow
+  // layout the vector decode stores, so content equality is key equality
+  private val probe = UnsafeProjection.create(keyOrds.toSeq.map(i =>
+    BoundReference(i, extended(i).dataType, nullable = true)))
 
   private var wrapper: org.apache.spark.sql.vectorized.ColumnarBatch = _
   private var reqBatch: org.apache.spark.sql.vectorized.ColumnarBatch = _
@@ -321,35 +80,8 @@ private[sources] class GraftVectorizedRowReader(part: GraftInputPartition,
   private var rowId = 0
   private var current = 0
 
-  /** The probe value of key `k` at `row` — the SAME raw comparable form
-    * [[GraftPartitionReader.rawValue]] renders from the vector files
-    * (the factory only routes here for key types whose raw form is
-    * recoverable from the catalyst vector). */
-  private def probe(k: Int, row: Int): Any = {
-    val v = wrapper.column(keyOrds(k))
-    if (v.isNullAt(row)) return null
-    keyTypes(k) match {
-      case BooleanType => v.getBoolean(row)
-      case IntegerType | DateType => v.getInt(row)
-      case LongType | TimestampType | TimestampNTZType => v.getLong(row)
-      case FloatType => v.getFloat(row)
-      case DoubleType => v.getDouble(row)
-      case StringType => new String(java.util.Base64.getEncoder
-        .encode(v.getUTF8String(row).getBytes))
-      case BinaryType => new String(java.util.Base64.getEncoder
-        .encode(v.getBinary(row)))
-      case other => throw new IllegalArgumentException(
-        s"unsupported delete-key type $other")
-    }
-  }
-
   private def isDeleted(row: Int): Boolean =
-    !deleted.isEmpty && {
-      val t = Seq.newBuilder[Any]
-      var k = 0
-      while (k < keyOrds.length) { t += probe(k, row); k += 1 }
-      deleted.contains(t.result())
-    }
+    !deleted.isEmpty && deleted.contains(probe(wrapper.getRow(row)))
 
   override def next(): Boolean = {
     while (true) {
@@ -387,95 +119,57 @@ private[sources] class GraftVectorizedRowReader(part: GraftInputPartition,
 private[sources] object GraftVectorizedRowReader {
   /** Test instrumentation: readers opened on the vectorized row path. */
   private[graft] val opened = new java.util.concurrent.atomic.AtomicLong(0L)
-}
 
-private[sources] object GraftPartitionReader {
-  private[sources] val EmptyKeys = new java.util.HashSet[Seq[Any]]()
+  private val EmptyKeys = new java.util.HashSet[UnsafeRow]()
 
-  private[sources] def projectSchema(file: MessageType,
-      cols: Seq[String]): MessageType = {
-    val kept = file.getFields.asScala.filter(f => cols.contains(f.getName))
-    new MessageType(file.getName, kept.asJava)
-  }
-
-  private def readGroups(file: String, cols: Set[String])(
-      f: (Group, Map[String, Int]) => Unit): Unit = {
-    val conf = new Configuration()
-    val path = new Path(file)
-    val footer = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-    val fileSchema = try footer.getFooter.getFileMetaData.getSchema
-      finally footer.close()
-    val projected = projectSchema(fileSchema, cols.toSeq)
-    val c = new Configuration()
-    c.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      projected.toString)
-    val idx = projected.getFields.asScala.zipWithIndex
-      .map { case (g, i) => g.getName -> i }.toMap
-    val r = org.apache.parquet.hadoop.ParquetReader
-      .builder(new GroupReadSupport(), path).withConf(c).build()
-    try {
-      var g = r.read()
-      while (g != null) { f(g, idx); g = r.read() }
-    } finally r.close()
-  }
-
-  /** The raw comparable value of field `i` of `g` (null-safe): what the
-    * deleted-key tuples and both row-side probes use. */
-  private[sources] def rawValue(g: Group, i: Int): Any = {
-    if (g.getFieldRepetitionCount(i) == 0) return null
-    val t = g.getType.getType(i).asPrimitiveType()
-    t.getPrimitiveTypeName match {
-      case BOOLEAN => g.getBoolean(i, 0)
-      case INT32 => g.getInteger(i, 0)
-      case INT64 => g.getLong(i, 0)
-      case FLOAT => g.getFloat(i, 0)
-      case DOUBLE => g.getDouble(i, 0)
-      case BINARY | INT96 | FIXED_LEN_BYTE_ARRAY =>
-        new String(java.util.Base64.getEncoder.encode(
-          g.getBinary(i, 0).getBytes))
-      case other => throw new IllegalArgumentException(s"unsupported key type $other")
-    }
-  }
-
-  /** The partition's deleted-key set (process-wide cached; see the
-    * cache notes below). Shared by BOTH row readers so the decode-once
-    * contract and the `loads` instrumentation hold regardless of which
-    * decode path a partition takes. */
+  /** The partition's deleted-key set: every key tuple of its vector
+    * files, decoded through the same [[GraftColumnarPartitionReader]]
+    * as the data — key columns at the table's declared types (`keys`),
+    * resolved through the same rename aliases (vector files are written
+    * under the THEN-current key names), partition-column keys as the
+    * partition's constant — and held as UnsafeRows, which compare by
+    * content. A tuple holding a null is dropped: like the equi
+    * anti-join of `MergeInto.readMerged`, a null key deletes nothing. */
   private[sources] def deletedKeysFor(part: GraftInputPartition,
-      renames: Map[String, Seq[String]]): java.util.HashSet[Seq[Any]] = {
+      keys: StructType, renames: Map[String, Seq[String]])
+      : java.util.HashSet[UnsafeRow] = {
     if (part.vectorFiles.isEmpty) return EmptyKeys
-    def keyAliases(c: String): Seq[String] = c +: renames.getOrElse(c, Nil)
-    deletedKeys(
-      part.vectorFiles.mkString(",") + "#" + part.keyCols.mkString(","),
+    deletedKeys(part.vectorFiles.mkString(",") + "#" + keys.catalogString,
       () => {
-        val s = new java.util.HashSet[Seq[Any]]()
-        val candidates = part.keyCols.flatMap(keyAliases).toSet
-        for (vf <- part.vectorFiles)
-          readGroups(vf, candidates) { (g, names) =>
-            s.add(part.keyCols.map(c =>
-              keyAliases(c).collectFirst {
-                case a if names.contains(a) => rawValue(g, names(a))
-              }.orNull))
+        val s = new java.util.HashSet[UnsafeRow]()
+        val proj = UnsafeProjection.create(keys)
+        val r = new GraftColumnarPartitionReader(
+          part.copy(dataFiles = part.vectorFiles, vectorFiles = Nil),
+          keys, renames, countRows = false)
+        try while (r.next()) {
+          val it = r.get().rowIterator()
+          while (it.hasNext) {
+            val k = proj(it.next())
+            if (!k.anyNull) s.add(k.copy())
           }
+        } finally r.close()
         s
       })
   }
 
-  // (vector-file list, key cols) -> decoded key set. Vector files are
-  // immutable once committed and a new vector commit changes the LIST,
-  // so entries never go stale; keys are small by the maintenance
-  // contract (materializeDeletes folds them), and the cache evicts
-  // wholesale at a coarse cap as a leak backstop.
+  // (vector-file list, key schema) -> decoded key set. CACHED
+  // process-wide: every SPLIT of a partition shares the same vectors,
+  // and one split per data file means a 100-file partition would
+  // otherwise re-read them 100 times per scan (100 object-store GETs
+  // each at scale). Vector files are immutable once committed and a new
+  // vector commit changes the LIST, so entries never go stale; keys are
+  // small by the maintenance contract (materializeDeletes folds them),
+  // and the cache evicts wholesale at a coarse cap as a leak backstop.
   private val cache = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.HashSet[Seq[Any]]]()
+    String, java.util.HashSet[UnsafeRow]]()
   private val MaxEntries = 256
 
   /** Test instrumentation: number of cache-miss vector LOADS (each one
     * reads every vector file of one partition). */
   private[graft] val loads = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private[sources] def deletedKeys(key: String,
-      load: () => java.util.HashSet[Seq[Any]]): java.util.HashSet[Seq[Any]] = {
+  private def deletedKeys(key: String,
+      load: () => java.util.HashSet[UnsafeRow]): java.util.HashSet[UnsafeRow] = {
     val hit = cache.get(key)
     if (hit != null) return hit
     // eviction OUTSIDE the compute function (mutating a CHM inside its
@@ -495,4 +189,3 @@ private[sources] object GraftPartitionReader {
     loads.set(0L)
   }
 }
-

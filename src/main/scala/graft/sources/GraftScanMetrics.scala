@@ -35,7 +35,6 @@ private[sources] object GraftScanMetrics {
   // bytes actually took, and what the delete vectors subtracted
   val RowsColumnar = "rowsDecodedColumnar"
   val RowsVectorizedRow = "rowsDecodedVectorizedRow"
-  val RowsGroupRow = "rowsDecodedGroupRow"
   val DvRowsSubtracted = "dvRowsSubtracted"
 
   /** The scan's advertised metric set (order is display order). */
@@ -46,7 +45,7 @@ private[sources] object GraftScanMetrics {
     new FilesSkippedBloomMetric, new FilesSkippedRuntimeMetric,
     new FilesSkippedLimitMetric, new BytesPlannedMetric,
     new RowsColumnarMetric, new RowsVectorizedRowMetric,
-    new RowsGroupRowMetric, new DvRowsSubtractedMetric)
+    new DvRowsSubtractedMetric)
 
   final case class Value(metricName: String, metricValue: Long)
       extends CustomTaskMetric {
@@ -71,12 +70,10 @@ private[sources] object GraftTaskDecodeCounters {
   final class Holder {
     var columnar = 0L
     var vecRow = 0L
-    var grpRow = 0L
     var dv = 0L
     def values: Array[CustomTaskMetric] = Array(
       GraftScanMetrics.Value(GraftScanMetrics.RowsColumnar, columnar),
       GraftScanMetrics.Value(GraftScanMetrics.RowsVectorizedRow, vecRow),
-      GraftScanMetrics.Value(GraftScanMetrics.RowsGroupRow, grpRow),
       GraftScanMetrics.Value(GraftScanMetrics.DvRowsSubtracted, dv))
   }
 }
@@ -128,10 +125,6 @@ private[sources] class RowsColumnarMetric extends CustomSumMetric {
 private[sources] class RowsVectorizedRowMetric extends CustomSumMetric {
   override def name(): String = GraftScanMetrics.RowsVectorizedRow
   override def description(): String = "rows decoded (vectorized row path)"
-}
-private[sources] class RowsGroupRowMetric extends CustomSumMetric {
-  override def name(): String = GraftScanMetrics.RowsGroupRow
-  override def description(): String = "rows decoded (Group-reader fallback)"
 }
 private[sources] class DvRowsSubtractedMetric extends CustomSumMetric {
   override def name(): String = GraftScanMetrics.DvRowsSubtracted

@@ -7,9 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type => PType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, DecimalLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimestampLogicalTypeAnnotation}
@@ -189,26 +187,6 @@ object GraftSource {
         java.time.LocalDateTime
           .parse(t.replace(' ', 'T'))
           .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-    }
-  }
-
-  /** The manifest a read plans against: the pinned snapshot, or the
-    * head. FULLY hydrated (every partition's blob) — planning paths
-    * that prune must use [[rootFor]] + `AtomicTable.hydrate` of the
-    * admitted keys instead, so file-granular metadata I/O stays
-    * bounded by the admitted set. */
-  private[sources] def manifestFor(root: String, pin: Option[Long])
-      : Option[AtomicTable.Manifest] = {
-    val rootPath = java.nio.file.Paths.get(root)
-    pin match {
-      case None => AtomicTable.manifest(rootPath)
-      case Some(v) =>
-        try Some(AtomicTable.manifestAt(rootPath, v))
-        catch {
-          case _: java.nio.file.NoSuchFileException | _: java.io.FileNotFoundException =>
-            throw new IllegalArgumentException(
-              s"versionAsOf=$v of $root is outside the retention window")
-        }
     }
   }
 
@@ -2070,7 +2048,6 @@ private[sources] class GraftScan(root: String, full: StructType,
     * scans qualify — their per-commit append manifests never reference
     * vectors, and the change columns ride as constant vectors. */
   private lazy val columnarEligible: Boolean =
-    GraftColumnar.enabled &&
     required.fields.forall(f => GraftColumnar.vectorizable(f.dataType)) && {
       if (changeFeed || startingVersion.isDefined) true
       else prunedManifest.forall(_.deletes.forall(_._2.isEmpty))

@@ -57,23 +57,9 @@ object Streams {
         date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
         col("n"), col("total"))
 
-  /** Stateful-stream shuffle sizing: the state store opens one partition
-    * per shuffle partition PER QUERY, so a stream whose key space is
-    * small (event types, user ids) pays pure per-partition overhead
-    * beyond a handful of partitions. Scope the stream to `n` partitions
-    * and restore the session setting after — at cluster scale the same
-    * dial is sized to key cardinality, not to the batch default. */
-  private def withStreamPartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prev)
-  }
-
   /** Scope one session conf around `f`, restoring the previous value
-    * (set or unset) after — the same discipline as
-    * [[withStreamPartitions]]. Streaming confs are read at query start,
-    * so scoping around start+awaitTermination covers the whole run. */
+    * (set or unset) after. Streaming confs are read at query start, so
+    * scoping around start+awaitTermination covers the whole run. */
   private def withConf[T](spark: SparkSession, key: String, value: String)(
       f: => T): T = {
     val prev = spark.conf.getOption(key)
@@ -94,16 +80,17 @@ object Streams {
     * variance in bench numbers); StreamsSpec proves the same pipelines
     * are correct under RocksDB, so flipping the provider is a config
     * change, not a code change. */
-  def withRocksDbState[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def withRocksDbState[T](spark: SparkSession)(f: => T): T =
+    withConf(spark, "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(f)
+
+  /** Stateful-stream shuffle sizing: the state store opens one partition
+    * per shuffle partition PER QUERY, so a stream whose key space is
+    * small (event types, user ids) pays pure per-partition overhead
+    * beyond a handful of partitions. Stateful streams here run at this
+    * many partitions — at cluster scale the same dial is sized to key
+    * cardinality, not to the batch default. */
+  private val StreamPartitions = "8"
 
   /** Run the tumbling-window stream over `dir` to completion with an
     * `AvailableNow` trigger (process everything currently in the source,
@@ -114,7 +101,7 @@ object Streams {
     * streaming path end-to-end against the batch oracle. */
   def tumblingAvailableNow(spark: SparkSession, dir: String,
       queryName: String = "ev_tumbling_stream_out"): DataFrame = {
-    withStreamPartitions(spark, 8) {
+    withConf(spark, "spark.sql.shuffle.partitions", StreamPartitions) {
       val q = tumblingCounts(readEvents(spark, dir))
         .writeStream.format("memory").queryName(queryName)
         .outputMode(OutputMode.Complete)
@@ -139,7 +126,7 @@ object Streams {
     // a ~5% shuffle-row reduction. Not worth a sort per input partition at
     // any scale with this gap/arrival distribution; re-evaluate only for
     // corpora whose events cluster far below the session gap.
-    withStreamPartitions(spark, 8) {
+    withConf(spark, "spark.sql.shuffle.partitions", StreamPartitions) {
       val q = sessionCounts(readEvents(spark, dir))
         .writeStream.format("memory").queryName(queryName)
         .outputMode(OutputMode.Complete)
@@ -159,7 +146,7 @@ object Streams {
     * accept re-emits past the watermark horizon. */
   def dedupAvailableNow(spark: SparkSession, dir: String,
       queryName: String = "ev_dedup_stream_out"): DataFrame = {
-    withStreamPartitions(spark, 8) {
+    withConf(spark, "spark.sql.shuffle.partitions", StreamPartitions) {
       val q = readEvents(spark, dir)
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
@@ -209,7 +196,7 @@ object Streams {
     // the default. Output is provably identical (StreamsSpec pins
     // stream == batch join; the driver oracle re-proves it).
     withConf(spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-      withStreamPartitions(spark, 8) {
+      withConf(spark, "spark.sql.shuffle.partitions", StreamPartitions) {
         val q = joined
           .select(col("user_id"), col("click_id"), col("purchase_id"),
             date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss").as("click_at"),
@@ -293,7 +280,7 @@ object Streams {
           last.foreach(state.update)
           out.result().iterator
       }
-    withStreamPartitions(spark, 8) {
+    withConf(spark, "spark.sql.shuffle.partitions", StreamPartitions) {
       val q = matched.toDF()
         .writeStream.format("memory").queryName(queryName)
         .outputMode(OutputMode.Append)
@@ -394,7 +381,7 @@ object Streams {
           }
           out.iterator
       }
-    withStreamPartitions(spark, 8) {
+    withConf(spark, "spark.sql.shuffle.partitions", StreamPartitions) {
       val q = matched.toDF()
         .writeStream.format("memory").queryName(queryName)
         .outputMode(OutputMode.Append)
@@ -536,7 +523,7 @@ object Streams {
     * the deployment shape of a streaming ingest job. */
   def ingestToWarehouse(spark: SparkSession, dir: String, table: String,
       checkpoint: String): Unit = {
-    withStreamPartitions(spark, 8) {
+    withConf(spark, "spark.sql.shuffle.partitions", StreamPartitions) {
       val q = readEvents(spark, dir)
         .writeStream
         .foreachBatch((df: DataFrame, id: Long) =>
@@ -718,7 +705,7 @@ object Streams {
       corpusTable: String, indexRoot: String, checkpoint: String,
       threshold: Double = 0.5,
       afterIndexAppend: Long => Unit = _ => ()): Unit = {
-    withStreamPartitions(spark, 8) {
+    withConf(spark, "spark.sql.shuffle.partitions", StreamPartitions) {
       val q = spark.readStream
         .schema(documentsSchema)
         .option("maxFilesPerTrigger", 1)
@@ -747,7 +734,7 @@ object Streams {
       corpusTable: String, indexRoot: String, checkpoint: String,
       threshold: Double = 0.5, intervalMs: Long = 100L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    withStreamPartitions(spark, 8) {
+    withConf(spark, "spark.sql.shuffle.partitions", StreamPartitions) {
       spark.readStream
         .schema(documentsSchema)
         .option("maxFilesPerTrigger", 1)
@@ -800,7 +787,7 @@ object Streams {
       .select(col("user_id"),
         (col("value").cast("decimal(18,6)") * lit(1000000L)).cast("long").as("micros"))
       .as[UserEventM]
-    withStreamPartitions(spark, 8) {
+    withConf(spark, "spark.sql.shuffle.partitions", StreamPartitions) {
       val q = runningTotalsExact(ev).toDF()
         .writeStream.format("memory").queryName(queryName)
         .outputMode(OutputMode.Update)

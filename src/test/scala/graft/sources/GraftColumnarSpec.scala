@@ -16,7 +16,8 @@ import graft.etl.AtomicTable
   * whole columnar/codegen physical layer. The seams the rewrite
   * re-opens (the r13 delete-key bug lived at exactly this kind of
   * boundary) each get their own pin: mixed-generation renames, delete
-  * vectors (row-based fallback), CDF constants, empty projections. */
+  * vectors (row-based scan) of every key type, CDF constants, empty
+  * projections. */
 class GraftColumnarSpec extends SparkSuite {
   import spark.implicits._
 
@@ -111,44 +112,80 @@ class GraftColumnarSpec extends SparkSuite {
     assert(spark.sql("SELECT count(*) FROM gcol.db.t2").as[Long].head() === 98L)
     assert(spark.sql("SELECT k FROM gcol.db.t2 WHERE k IN (7, 13)")
       .collect().isEmpty, "vector-hidden keys must not resurface")
-    // the ROW path still DECODES vectorized: simple key types (here a
-    // BIGINT) probe the batch's key vectors per row instead of falling
-    // back to the parquet-mr Group reader
+    // the ROW path still DECODES vectorized: the probe reads the
+    // batch's key vectors per row
     assert(GraftVectorizedRowReader.opened.get() > opened0,
-      "DV scans with simple key types must take the vectorized row path")
+      "DV scans must take the vectorized row path")
   }
 
-  test("decimal delete keys fall back to the Group reader, results exact") {
+  test("delete keys of every type subtract exactly as readMerged does") {
     warehouse
-    spark.sql("CREATE TABLE gcol.db.t6 (dec DECIMAL(12,3), v DOUBLE, " +
-      "p STRING) PARTITIONED BY (p) TBLPROPERTIES ('retain'='5')")
-    (0 until 50).map(i => (BigDecimal(i).setScale(3) + BigDecimal("0.125"),
-      i * 1.0, "a")).toDF("dec", "v", "p").createOrReplaceTempView("col_dk")
-    spark.sql("INSERT INTO gcol.db.t6 SELECT * FROM col_dk")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("dec",
-        org.apache.spark.sql.types.DecimalType(12, 3)),
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("p",
-        org.apache.spark.sql.types.StringType)))
-    graft.etl.MergeInto.deleteKeysMor(spark,
-      java.nio.file.Paths.get(warehouse, "db", "t6").toString, schema,
-      Seq(("7.125", "a"), ("13.125", "a")).toDF("dec", "p")
-        .select(org.apache.spark.sql.functions.col("dec")
-          .cast("decimal(12,3)").as("dec"),
-          org.apache.spark.sql.functions.col("p")),
-      Seq("dec"), "p", retain = 5)
-    // a decimal's raw probe form depends on the file's physical width —
-    // the vectorized row path must NOT claim this partition
-    val opened0 = GraftVectorizedRowReader.opened.get()
-    assert(spark.sql("SELECT count(*) FROM gcol.db.t6").as[Long].head()
-      === 48L, "decimal-keyed MOR delete must subtract exactly")
-    assert(spark.sql(
-      "SELECT v FROM gcol.db.t6 WHERE dec = CAST(7.125 AS DECIMAL(12,3))")
-      .collect().isEmpty, "deleted decimal key must not resurface")
-    assert(GraftVectorizedRowReader.opened.get() === opened0,
-      "decimal delete keys must take the Group-reader fallback")
+    // (table suffix, declared key type, key of row `id`); row 40's key
+    // is NULL. The ARRAY column rides every scan: the vectorized row
+    // path must decode nested columns next to any key type.
+    val cases = Seq(
+      ("smallint", "SMALLINT", "CAST(id AS SMALLINT)"),
+      ("tinyint", "TINYINT", "CAST(id AS TINYINT)"),
+      ("decimal", "DECIMAL(12,3)", "CAST(id AS DECIMAL(12,3)) + 0.125"),
+      ("string", "STRING", "CONCAT('s', id)"),
+      ("date", "DATE", "DATE_ADD(DATE'2020-01-01', CAST(id AS INT))"),
+      ("bigint", "BIGINT", "id"))
+    cases.foreach { case (name, keyType, keyExpr) => withClue(s"$keyType: ") {
+      val t = s"gcol.db.kt_$name"
+      spark.sql(s"CREATE TABLE $t (k $keyType, arr ARRAY<INT>, v DOUBLE, " +
+        "p STRING) PARTITIONED BY (p) TBLPROPERTIES ('retain'='5')")
+      spark.sql(s"INSERT INTO $t SELECT IF(id = 40, NULL, $keyExpr), " +
+        "array(CAST(id AS INT), 1), id * 1.0, IF(id % 2 = 0, 'a', 'b') " +
+        "FROM range(41)")
+      val dir = java.nio.file.Paths.get(warehouse, "db", s"kt_$name").toString
+      val schema = spark.table(t).schema
+      // three keys plus the NULL key: an equi anti-join deletes no NULL
+      graft.etl.MergeInto.deleteKeysMor(spark, dir, schema,
+        spark.sql(s"SELECT k, p FROM $t WHERE v IN (3, 7, 18) OR k IS NULL"),
+        Seq("k"), "p", retain = 5)
+      val cols = Seq("k", "arr", "v", "p").map(org.apache.spark.sql.functions.col)
+      def rows(df: DataFrame): Seq[String] =
+        df.select(cols: _*).collect().map(_.toString).toSeq.sorted
+      val opened0 = GraftVectorizedRowReader.opened.get()
+      val got = rows(spark.sql(s"SELECT * FROM $t"))
+      assert(GraftVectorizedRowReader.opened.get() > opened0,
+        "a vector-carrying scan must open the vectorized row reader")
+      assert(got === rows(graft.etl.MergeInto.readMerged(spark, dir, schema)))
+      assert(got.length === 38, "three keyed rows subtract, the NULL row stays")
+    }}
+  }
+
+  test("a delete key including the partition column subtracts") {
+    warehouse
+    spark.sql("CREATE TABLE gcol.db.kp (k BIGINT, v DOUBLE, p STRING) " +
+      "PARTITIONED BY (p) TBLPROPERTIES ('retain'='5')")
+    spark.sql("INSERT INTO gcol.db.kp SELECT id % 10, id * 1.0, " +
+      "IF(id < 10, 'a', 'b') FROM range(20)")
+    val dir = java.nio.file.Paths.get(warehouse, "db", "kp").toString
+    // vector files hold only `k`: the partition value lives in the path,
+    // so both the vector decode and the probe must read it as the
+    // partition's constant
+    val schema = spark.table("gcol.db.kp").schema
+    graft.etl.MergeInto.deleteKeysMor(spark, dir, schema,
+      Seq((3L, "a"), (7L, "b")).toDF("k", "p"), Seq("k", "p"), "p", retain = 5)
+    assert(spark.sql("SELECT k, p FROM gcol.db.kp WHERE k IN (3, 7)")
+      .as[(Long, String)].collect().sorted.toSeq === Seq((3L, "b"), (7L, "a")))
+    assert(spark.sql("SELECT count(*) FROM gcol.db.kp").as[Long].head() === 18L)
+    assert(graft.etl.MergeInto.readMerged(spark, dir, schema).count() === 18L)
+  }
+
+  test("a key frame typed wider than the key column still deletes") {
+    warehouse
+    spark.sql("CREATE TABLE gcol.db.kw (k INT, v DOUBLE, p STRING) " +
+      "PARTITIONED BY (p) TBLPROPERTIES ('retain'='5')")
+    spark.sql("INSERT INTO gcol.db.kw SELECT CAST(id AS INT), id * 1.0, 'a' " +
+      "FROM range(10)")
+    val dir = java.nio.file.Paths.get(warehouse, "db", "kw").toString
+    val schema = spark.table("gcol.db.kw").schema
+    graft.etl.MergeInto.deleteKeysMor(spark, dir, schema,
+      Seq((3L, "a")).toDF("k", "p"), Seq("k"), "p", retain = 5)
+    assert(spark.sql("SELECT count(*) FROM gcol.db.kw").as[Long].head() === 9L)
+    assert(graft.etl.MergeInto.readMerged(spark, dir, schema).count() === 9L)
   }
 
   test("mixed-generation RENAME files decode columnar in ONE scan; added columns null-fill") {

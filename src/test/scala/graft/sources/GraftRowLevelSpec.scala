@@ -235,20 +235,20 @@ class GraftRowLevelSpec extends SparkSuite {
     val schema = spark.table("rl.db.dvc").schema
     graft.etl.MergeInto.deleteKeysMor(spark, dir, schema,
       Seq((20L, "a")).toDF("id", "p"), Seq("id"), "p", retain = 5)
-    GraftPartitionReader.clearDvCache()
+    GraftVectorizedRowReader.clearDvCache()
     assert(spark.sql("SELECT id FROM rl.db.dvc ORDER BY id")
       .as[Long].collect().toSeq === Seq(10L, 30L))
-    assert(GraftPartitionReader.loads.get() === 1L,
+    assert(GraftVectorizedRowReader.loads.get() === 1L,
       "three splits must share ONE vector decode")
     // a second scan hits the cache outright (vector dirs are immutable)
     assert(spark.sql("SELECT count(*) FROM rl.db.dvc")
       .as[Long].head() === 2L)
-    assert(GraftPartitionReader.loads.get() === 1L)
+    assert(GraftVectorizedRowReader.loads.get() === 1L)
     // a NEW vector commit changes the file list = a new cache key
     graft.etl.MergeInto.deleteKeysMor(spark, dir, schema,
       Seq((30L, "a")).toDF("id", "p"), Seq("id"), "p", retain = 5)
     assert(spark.sql("SELECT id FROM rl.db.dvc").as[Long].collect().toSeq ===
       Seq(10L))
-    assert(GraftPartitionReader.loads.get() === 2L)
+    assert(GraftVectorizedRowReader.loads.get() === 2L)
   }
 }

@@ -77,8 +77,8 @@ class GraftScanMetricsSpec extends SparkSuite {
     assert(plain("rowsDecodedColumnar") === 100L)
     assert(plain("rowsDecodedVectorizedRow") === 0L)
     assert(plain("dvRowsSubtracted") === 0L)
-    // after a keyed MOR delete: rows decode on the vectorized ROW path,
-    // subtraction is visible, the Group fallback stays untouched
+    // after a keyed MOR delete: rows decode on the vectorized ROW path
+    // and the subtraction is visible
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k",
         org.apache.spark.sql.types.LongType),
@@ -94,7 +94,6 @@ class GraftScanMetricsSpec extends SparkSuite {
     assert(dv("rowsDecodedVectorizedRow") === 98L)
     assert(dv("dvRowsSubtracted") === 2L)
     assert(dv("rowsDecodedColumnar") === 0L)
-    assert(dv("rowsDecodedGroupRow") === 0L)
   }
 
   test("partition pruning reports skipped partitions and their files") {
@@ -186,25 +185,6 @@ class GraftScanMetricsSpec extends SparkSuite {
     assert(m(GraftWriteMetrics.FilesWritten).value === 3L)
     // one bloom builder per (partition value, bloom column)
     assert(m(GraftWriteMetrics.BloomBuilders).value === 3L)
-  }
-
-  test("the kill switch routes to the Group reader and its metric proves it") {
-    warehouse
-    spark.sql("CREATE TABLE gm.db.ks (id BIGINT, p STRING) " +
-      "PARTITIONED BY (p) TBLPROPERTIES ('retain'='5')")
-    (0L until 40L).map(i => (i, "a")).toDF("id", "p")
-      .createOrReplaceTempView("src_ks")
-    spark.sql("INSERT INTO gm.db.ks SELECT * FROM src_ks")
-    System.setProperty("graft.scan.columnar", "false")
-    try {
-      val m = metricsOf(spark.sql("SELECT id FROM gm.db.ks"))
-      assert(m("rowsDecodedGroupRow") === 40L,
-        "kill switch must route every row through the Group reader")
-      assert(m("rowsDecodedColumnar") === 0L)
-      assert(m("rowsDecodedVectorizedRow") === 0L)
-    } finally System.setProperty("graft.scan.columnar", "true")
-    val back = metricsOf(spark.sql("SELECT id FROM gm.db.ks"))
-    assert(back("rowsDecodedColumnar") === 40L)
   }
 
   test("a zero-exchange join task keeps each scan's decode tally separate") {
