@@ -5,7 +5,7 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{col, date_format, hash, lit, pmod, substring, xxhash64}
 import org.apache.spark.sql.types.StructType
@@ -583,11 +583,16 @@ object AtomicTable {
     * the table has never committed). Column order follows `schema`. */
   def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
     manifest(Paths.get(table)) match {
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      case None => emptyFrame(spark, schema)
       case Some(m) => readManifest(spark, table, schema, m)
     }
+
+  /** An empty frame with `schema` as a local relation. Unlike a frame over
+    * an empty RDD it is known to be empty at planning time, so the
+    * optimizer removes the joins and unions it feeds instead of planning
+    * an exchange for each. */
+  private[etl] def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
 
   /** Decode %XX escape sequences only — RFC-3986 percent decoding of
@@ -805,8 +810,7 @@ object AtomicTable {
       val dt = schema(c).dataType
       col(c) >= lit(lo).cast(dt) && col(c) <= lit(hi).cast(dt)
     }.reduce(_ && _)
-    withHeadRoot(Paths.get(table))(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)) { r =>
+    withHeadRoot(Paths.get(table))(emptyFrame(spark, schema)) { r =>
       val kept = r.partitions.filter { case (part, _) =>
         r.stats.get(part) match {
           case Some(s) => bounds.forall { case (c, lo, hi) =>
@@ -820,8 +824,7 @@ object AtomicTable {
           case None => true // no zone map: cannot prune, must read
         }
       }
-      if (kept.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      if (kept.isEmpty) emptyFrame(spark, schema)
         .filter(residual)
       // hydrate ONLY the admitted partitions' blobs: the pruning above
       // ran on the root alone, so a pruned metadata read costs
@@ -871,11 +874,9 @@ object AtomicTable {
     * none match). */
   def readPartitions(spark: SparkSession, table: String, schema: StructType,
       parts: Set[String]): DataFrame =
-    withHeadRoot(Paths.get(table))(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)) { r =>
+    withHeadRoot(Paths.get(table))(emptyFrame(spark, schema)) { r =>
       val kept = r.partitions.filter { case (p, _) => parts(p) }
-      if (kept.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      if (kept.isEmpty) emptyFrame(spark, schema)
       // selected-partition blobs only — cost ∝ selected, never table
       else readManifest(spark, table, schema,
         hydrate(Paths.get(table), r, kept.keySet).copy(partitions = kept))
@@ -1221,8 +1222,7 @@ object AtomicTable {
     * purpose. Rename/drop are not evolutions here — they are rewrites. */
   def readEvolved(spark: SparkSession, table: String, schema: StructType): DataFrame =
     manifest(Paths.get(table)) match {
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      case None => emptyFrame(spark, schema)
       case Some(m) => readManifestEvolved(spark, table, schema, m)
     }
 
@@ -1241,8 +1241,7 @@ object AtomicTable {
       renames: Map[String, Seq[String]] = Map.empty): DataFrame = {
     val renamedAway: Set[String] = renames.valuesIterator.flatten.toSet
     if (m.partitions.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      return emptyFrame(spark, schema)
     txnScans(spark, table, m).map { df =>
       val have = df.schema.fieldNames.toSet
       df.select(schema.map { f =>

@@ -83,8 +83,7 @@ object ChangeFeed {
         .withColumn(ChangeTypeCol, lit(tpe))
         .withColumn(CommitVersionCol, lit(v))
 
-    val empty = tag(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema), "insert")
+    val empty = tag(AtomicTable.emptyFrame(spark, schema), "insert")
       .limit(0)
 
     // a properties-only commit on a still-empty table (both manifests

@@ -3,6 +3,7 @@ package graft.etl
 import java.nio.file.{Files, Path, Paths}
 import java.time.{Instant, LocalDate}
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -15,13 +16,15 @@ import graft.model.Schemas.ExtractionState
 /** The 3-phase pipeline driver (O1-O3, `/root/reference/src/main.py:18-74`)
   * re-expressed Spark-first: extract is driver-side HTTP + raw-zone
   * snapshots + state commits; transform builds one lazy fact plan
-  * (explode → cast → union → sort) with no action, normalizing every FRED
+  * (explode → cast → union) with no action, normalizing every FRED
   * response of the run as one batch frame ([[Normalize.fredBatch]]) so
   * the plan does not grow with the number of series; load evaluates it
   * exactly once, as the persisted classification of [[mergeFact]] that
-  * feeds both the run report and the partition rewrite. Phase failures
-  * abort the run with a phase-tagged error; a single bad FRED series is
-  * skipped, not fatal (O2, `src/main.py:41-47`).
+  * feeds both the run report and the partition rewrite. The load path
+  * does not sort the fact rows: the MERGE's dedup window reshuffles them
+  * anyway, and the writer orders each partition it rewrites. Phase
+  * failures abort the run with a phase-tagged error; a single bad FRED
+  * series is skipped, not fatal (O2, `src/main.py:41-47`).
   */
 object Pipeline {
 
@@ -91,20 +94,21 @@ object Pipeline {
     * persisted, one `(source, action)` count over it yields both the
     * report and the changed sources, and the upsert reads its incoming
     * rows back from the same cache, so the fact plan is never
-    * re-evaluated. The rewrite is rebalanced by source and sorted within
-    * tasks: one file per rewritten partition, unless AQE splits a skewed
-    * partition across tasks. The commit is AtomicTable's single
-    * version-pointer rename, matching the reference's one-transaction
-    * MERGE (`src/load.py:86-103`): a crash mid-write leaves the table
-    * readable at the previous version, and staged txn dirs never
-    * overwrite the files the plan is reading. */
+    * re-evaluated. The cache holds one run's fetch, so the count runs in
+    * a single task, with no exchange. The rewrite is rebalanced by source
+    * and sorted within tasks: one file per rewritten partition, unless AQE
+    * splits a skewed partition across tasks. The commit is AtomicTable's
+    * single version-pointer rename, matching the reference's
+    * one-transaction MERGE (`src/load.py:86-103`): a crash mid-write
+    * leaves the table readable at the previous version, and staged txn
+    * dirs never overwrite the files the plan is reading. */
   def mergeFact(spark: SparkSession, incoming: DataFrame, factPath: String): Map[String, Long] = {
     val existing = AtomicTable.read(spark, factPath, Schemas.fact)
     val keys = Seq("series_id", "date")
     val deduped = Merge.lastWinsByKey(incoming, keys, col("value").desc_nulls_last)
     val classified = Merge.classify(deduped, existing, keys, "value").persist()
     try {
-      val counts = classified.groupBy("source", "action").count().collect()
+      val counts = classified.coalesce(1).groupBy("source", "action").count().collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       // sources with at least one insert/update; unchanged partitions are
       // neither read again nor rewritten
@@ -124,38 +128,27 @@ object Pipeline {
   }
 
   /** Dim load: insert-if-absent, append-only (`src/load.py:108-134`).
-    * Each incoming row is flagged present or absent once, and the flagged
-    * frame is persisted: one collect of the flags yields both figures, and
-    * the append reads the absent rows back from the same cache. The dim
-    * holds one row per configured series, so its keys are deduplicated in
-    * one task, with no exchange, and the flags are few enough to collect. */
+    * The dim holds one row per configured series, so it is classified on
+    * the driver: one job collects the stored `series_id`s, the incoming
+    * rows are a local frame whose collect starts no job, and the absent
+    * rows are appended as one file. A NULL id never matches, so such a
+    * row is inserted on every run; a series configured twice is stored
+    * twice, and each incoming row counts once. */
   def mergeDim(spark: SparkSession, incoming: DataFrame, dimPath: String): Map[String, Long] = {
-    val exists = Files.exists(Paths.get(dimPath))
-    val existing =
-      if (exists) spark.read.schema(Schemas.dim).parquet(dimPath)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        Schemas.dim)
-    val present = existing.select(col("series_id"), lit(true).as("_present"))
-      .coalesce(1).distinct()
-    val flagged = incoming.join(present, Seq("series_id"), "left_outer")
-      .withColumn("_present", col("_present").isNotNull)
-      .persist()
-    try {
-      val flags = flagged.select("_present").collect().map(_.getBoolean(0))
-      val inserted = flags.count(!_).toLong
-      if (inserted > 0)
-        flagged.filter(!col("_present")).drop("_present")
-          .write.mode(SaveMode.Append).parquet(dimPath)
-      Map("inserted" -> inserted, "unchanged" -> (flags.length - inserted))
-    } finally flagged.unpersist()
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val children = Files.list(p)
-      try children.forEach(deleteRecursively) finally children.close()
+    val present: Set[String] =
+      if (Files.exists(Paths.get(dimPath)))
+        spark.read.schema(Schemas.dim).parquet(dimPath).select("series_id")
+          .collect().map(_.getString(0)).toSet
+      else Set.empty
+    val rows = incoming.collect()
+    val absent = rows.filter { r =>
+      val id = r.getAs[String]("series_id")
+      id == null || !present(id)
     }
-    Files.deleteIfExists(p)
+    if (absent.nonEmpty)
+      spark.createDataFrame(absent.toSeq.asJava, incoming.schema).coalesce(1)
+        .write.mode(SaveMode.Append).parquet(dimPath)
+    Map("inserted" -> absent.length.toLong, "unchanged" -> (rows.length - absent.length).toLong)
   }
 
   /** Full run: extract → transform → load with the reference's failure
@@ -193,7 +186,7 @@ object Pipeline {
       try {
         val fredFrame = Normalize.fredBatch(spark, fredJsons)
         val blsFrame = Normalize.blsBatch(Normalize.readBlsJson(spark, blsJson), blsSeries)
-        val fact = Transforms.combineFactTables(Seq(fredFrame, blsFrame))
+        val fact = fredFrame.unionByName(blsFrame)
         val dim = Transforms.buildDimSeries(spark, fredSeries, blsSeries)
         (fact, dim)
       } catch {

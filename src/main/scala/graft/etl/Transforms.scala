@@ -24,11 +24,10 @@ object Transforms {
     * In Spark the unions fuse into one plan node, and no input adds an
     * exchange of its own ([[graft.ingest.Normalize]] sorts per document
     * locally, and its FRED batch does not sort), so this sort's range
-    * exchange is the only exchange. It needs none only when every input
-    * is one partition, as per-document normalized frames are; the
-    * pipeline's FRED batch is a multi-partition local scan, so there the
-    * range exchange runs. Empty frames union fine
-    * (`tests/test_transform.py:213-218`). */
+    * exchange is the only exchange. [[Pipeline.run]] does not call this:
+    * its MERGE reshuffles the rows by key, and the writer orders each
+    * partition it rewrites, so the load path never pays for the sort.
+    * Empty frames union fine (`tests/test_transform.py:213-218`). */
   def combineFactTables(frames: Seq[DataFrame]): DataFrame = {
     require(frames.nonEmpty, "combineFactTables needs at least one frame")
     canonicalSort(frames.reduce(_ unionByName _))

@@ -26,8 +26,10 @@ import graft.model.Schemas
   * `coalesce(1)` plus `sortWithinPartitions` gives the same total order as
   * a global sort without a range exchange or its sampling job.
   * `coalesce(1)` keeps the order total when a caller hands in a
-  * multi-partition raw frame. [[fredBatch]] does not sort: its rows are
-  * ordered by T12's canonical sort ([[graft.etl.Transforms.combineFactTables]]).
+  * multi-partition raw frame. [[fredBatch]] does not sort: the pipeline's
+  * load path needs no row order, and the warehouse writer orders each
+  * partition it writes. A caller that wants T12's canonical order applies
+  * [[graft.etl.Transforms.combineFactTables]].
   */
 object Normalize {
 
@@ -53,7 +55,7 @@ object Normalize {
   /** Parse every FRED response of a run, given as `(seriesId, seriesName,
     * json)`, in one plan: a local frame of the documents, `from_json` and
     * a single explode. Rows equal the union of the per-document
-    * [[fredObservations]] frames; their order is left to T12. */
+    * [[fredObservations]] frames, in no particular order. */
   def fredBatch(spark: SparkSession, docs: Seq[(String, String, String)]): DataFrame = {
     import spark.implicits._
     docs.toDF("series_id", "series_name", "json")

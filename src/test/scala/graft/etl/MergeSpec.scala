@@ -3,6 +3,9 @@ package graft.etl
 import java.sql.Date
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -12,7 +15,7 @@ import graft.SparkSuite
   * FIXTURES.md A3): first run inserts all, identical rerun is all
   * unchanged (idempotency), a value change updates exactly that key,
   * nulls round-trip, ε=1e-9 null-safe compare. */
-class MergeSpec extends SparkSuite {
+class MergeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def fact(rows: Seq[(String, String, String, Option[Double], String)]): DataFrame =
@@ -34,6 +37,17 @@ class MergeSpec extends SparkSuite {
     val empty = incoming.limit(0)
     assert(statsMap(Merge.classify(incoming, empty, keys, "value")) ===
       Map("insert" -> 3L))
+  }
+
+  test("classifying against a table with no commits plans no join and no exchange") {
+    val table = java.nio.file.Files.createTempDirectory("graft-never-committed")
+    val classified = Merge.classify(fact(sample),
+      AtomicTable.read(spark, table.toString, graft.model.Schemas.fact), keys, "value")
+    assert(statsMap(classified) === Map("insert" -> 3L))
+    val plan = classified.queryExecution.executedPlan
+    assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty &&
+      collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty,
+      s"an empty table must fold away:\n$plan")
   }
 
   test("identical rerun is all unchanged (idempotency)") {

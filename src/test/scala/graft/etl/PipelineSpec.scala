@@ -7,6 +7,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -104,6 +105,8 @@ class PipelineSpec extends SparkSuite {
     val (layout, payloads) = freshLayout()
     val src = new FileSeriesSource(payloads)
     Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
+    assert(Files.list(java.nio.file.Paths.get(layout.dimPath)).toArray
+      .count(_.toString.endsWith(".parquet")) === 1, "the cold run writes dim_series as one file")
     def partFiles(source: String): Map[String, Long] = {
       val root = java.nio.file.Paths.get(layout.factPath)
       val dir = root.resolve(AtomicTable.manifest(root).get.partitions(source).head)
@@ -213,6 +216,38 @@ class PipelineSpec extends SparkSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  /** The result of `body` and the Spark jobs it started, each named by
+    * its call site's first word ("collect", "parquet", or the
+    * adaptive-execution stage runner). */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.maxBy(_.stageId).name.takeWhile(_ != ' '))
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val result = body
+      ListenerBusDrain(spark.sparkContext)
+      (result, jobs.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("each Pipeline.run starts a fixed handful of Spark jobs") {
+    val (layout, payloads) = freshLayout()
+    val src = new FileSeriesSource(payloads)
+    def jobs(): Int = jobsOf(Pipeline.run(spark, src, layout, fredSeries,
+      Fixtures.blsSeriesMap, today, now))._2.size
+    val cold = jobs()
+    val unchanged = jobs()
+    Files.writeString(payloads.resolve("fred_UNRATE.json"),
+      Fixtures.fredPayload.replace("\"5.2\"", "\"6.1\""))
+    val revision = jobs()
+    assert((cold, unchanged, revision) === ((6, 6, 9)),
+      "jobs of a (cold, unchanged, one-series revision) run")
+  }
+
   test("mergeFact evaluates the fact plan once: one collect, at most one write") {
     val (layout, _) = freshLayout()
     val revised = Fixtures.fredPayload.replace("\"5.2\"", "\"5.9\"")
@@ -226,17 +261,21 @@ class PipelineSpec extends SparkSuite {
     }
   }
 
-  test("mergeDim classifies once: one collect, at most one write") {
+  test("mergeDim starts at most one read job and one write job") {
     val (layout, _) = freshLayout()
     def dim(fred: Seq[(String, String)]) =
       Transforms.buildDimSeries(spark, fred, Fixtures.blsSeriesMap)
-    for ((fred, expected, writes) <- Seq(
-        (fredSeries, Map("inserted" -> 3L, "unchanged" -> 0L), true),
-        (fredSeries, Map("inserted" -> 0L, "unchanged" -> 3L), false),
-        (fredSeries :+ ("GDP" -> "GDP"), Map("inserted" -> 1L, "unchanged" -> 3L), true))) {
-      val (stats, seen) = actionsOf(Pipeline.mergeDim(spark, dim(fred), layout.dimPath))
+    // "collect" reads the stored ids; "parquet" appends. The incoming
+    // rows are a local frame, so collecting them starts no job, and a dim
+    // that does not exist yet is not read.
+    for ((fred, expected, jobs) <- Seq(
+        (fredSeries, Map("inserted" -> 3L, "unchanged" -> 0L), Seq("parquet")),
+        (fredSeries, Map("inserted" -> 0L, "unchanged" -> 3L), Seq("collect")),
+        (fredSeries :+ ("GDP" -> "GDP"), Map("inserted" -> 1L, "unchanged" -> 3L),
+          Seq("collect", "parquet")))) {
+      val (stats, seen) = jobsOf(Pipeline.mergeDim(spark, dim(fred), layout.dimPath))
       assert(stats === expected)
-      assert(seen === (if (writes) Seq("collect", "command") else Seq("collect")))
+      assert(seen === jobs)
     }
     assert(spark.read.parquet(layout.dimPath).count() === 4)
 
@@ -248,5 +287,12 @@ class PipelineSpec extends SparkSuite {
       Map("inserted" -> 4L, "unchanged" -> 0L))
     assert(Pipeline.mergeDim(spark, doubled, twice.dimPath) ===
       Map("inserted" -> 0L, "unchanged" -> 4L))
+
+    // a NULL id matches nothing, so its row is inserted on every run
+    val (nulls, _) = freshLayout()
+    val nameless = Transforms.buildDimSeries(spark, Seq("Nameless" -> null), Nil)
+    for (_ <- 1 to 2)
+      assert(Pipeline.mergeDim(spark, nameless, nulls.dimPath) ===
+        Map("inserted" -> 1L, "unchanged" -> 0L))
   }
 }

@@ -63,11 +63,10 @@ class TransformsSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   }
 
   test("the fact plan Pipeline.run builds does not grow with the number of FRED series") {
-    def fact(series: Int): DataFrame = Transforms.combineFactTables(Seq(
-      Normalize.fredBatch(spark,
-        (1 to series).map(i => (s"S$i", s"Series $i", Fixtures.fredPayload))),
-      Normalize.blsBatch(Normalize.readBlsJson(spark, Fixtures.blsPayload),
-        Fixtures.blsSeriesMap)))
+    def fact(series: Int): DataFrame = Normalize.fredBatch(spark,
+        (1 to series).map(i => (s"S$i", s"Series $i", Fixtures.fredPayload)))
+      .unionByName(Normalize.blsBatch(Normalize.readBlsJson(spark, Fixtures.blsPayload),
+        Fixtures.blsSeriesMap))
     def shape(series: Int): (Int, Int) = {
       val df = fact(series)
       assert(df.collect().length === 3 * series + 6)
