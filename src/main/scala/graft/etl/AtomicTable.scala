@@ -5,8 +5,14 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, date_format, hash, lit, pmod, substring, xxhash64}
 import org.apache.spark.sql.types.StructType
 
@@ -1156,18 +1162,64 @@ object AtomicTable {
     * restores the partition column from the dir names; a filter on it
     * pushes through the union into each scan's PartitionFilters). Dirs
     * with a committed-file list are read as exactly those files — a
-    * zombie task attempt's straggler never enters the scan. */
+    * zombie task attempt's straggler never enters the scan. Each scan's
+    * data schema comes from one footer ([[txnScan]]), so building the
+    * read starts no Spark job. */
   private def txnScans(spark: SparkSession, table: String,
       m: Manifest): Seq[DataFrame] = {
     val byTxn = m.allDirs.groupBy(txnDirOf)
     byTxn.toSeq.sortBy(_._1).map { case (txnDir, dirs) =>
-      val paths = dirs.flatMap { d =>
+      txnScan(spark, table, txnDir, dirs.flatMap { d =>
         m.files.get(d) match {
-          case Some(names) => names.sorted.map(n => s"$table/$d/$n")
-          case None => Seq(s"$table/$d")
+          case Some(names) => names.sorted.map(n => s"$d/$n")
+          case None => Seq(d)
         }
+      })
+    }
+  }
+
+  /** A parquet scan of `paths` (table-relative files or partition dirs,
+    * all under `txnDir`) whose data schema is read on the driver from
+    * ONE footer: the first data file by path, its Spark row metadata
+    * when present, else the parquet schema converted — the rule Spark's
+    * own inference applies with `mergeSchema` off, without the job that
+    * inference starts. The partition columns stay out of the passed
+    * schema, so they are still restored, and typed, from the dir names.
+    * With no data file to read (nothing committed there) the read falls
+    * back to inference and fails as it always did. */
+  private[etl] def txnScan(spark: SparkSession, table: String, txnDir: String,
+      paths: Seq[String]): DataFrame = {
+    val first = paths.sorted.iterator.flatMap { p =>
+      val f = Paths.get(s"$table/$p")
+      if (!Files.isDirectory(f)) Iterator(f)
+      else {
+        // Spark's listing skips hidden (`_`, `.`) files: markers and checksums
+        val s = Files.list(f)
+        try s.iterator.asScala.filter { q =>
+          val n = q.getFileName.toString
+          Files.isRegularFile(q) && !n.startsWith("_") && !n.startsWith(".")
+        }.toSeq.sortBy(_.toString).iterator
+        finally s.close()
       }
-      spark.read.option("basePath", s"$table/$txnDir").parquet(paths: _*)
+    }.nextOption()
+    val reader = spark.read.option("basePath", s"$table/$txnDir")
+    val full = paths.map(p => s"$table/$p")
+    first match {
+      case None => reader.parquet(full: _*)
+      case Some(f) =>
+        val conf = spark.sessionState.newHadoopConf()
+        val path = new HPath(f.toUri)
+        val in = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+          ParquetReadOptions.builder()
+            .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+        val footer = try in.getFooter finally in.close()
+        val fileSchema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(path, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        val pcols = Paths.get(s"$table/$txnDir").relativize(f.getParent)
+          .iterator.asScala.map(_.toString.takeWhile(_ != '=')).toSet
+        reader.schema(StructType(fileSchema.filterNot(c => pcols(c.name))))
+          .parquet(full: _*)
     }
   }
 
@@ -1289,8 +1341,7 @@ object AtomicTable {
     val dirs = sel.values.flatten.toSeq.sorted
     val byTxn = dirs.groupBy(txnDirOf)
     val dv = byTxn.toSeq.sortBy(_._1).map { case (txnDir, ds) =>
-      spark.read.option("basePath", s"$table/$txnDir")
-        .parquet(ds.map(d => s"$table/$d"): _*)
+      txnScan(spark, table, txnDir, ds)
     }.reduce(_.unionByName(_))
     val joinCols = keyCols ++ partitionCols
     val dvKeys = dv.select(joinCols.map { c =>
@@ -1657,6 +1708,10 @@ object AtomicTable {
     }
   }
 
+  /** `appendSet`: partitions whose staged dirs APPEND to their current
+    * ones (as with `append`) while every other written partition is
+    * replaced — one staged write and one commit for a MERGE that
+    * rewrites some partitions and only inserts into others. */
   /** `sortedBy`: the caller asserts every staged FILE's rows are sorted
     * by these columns (ascending, nulls first) — recorded per dir so the
     * DSv2 scan can report output ordering. Only pass it when the input
@@ -1671,6 +1726,7 @@ object AtomicTable {
       expectedVersion: Option[Long] = None,
       operation: String = "write",
       append: Boolean = false,
+      appendSet: Set[String] = Set.empty,
       sortedBy: Seq[String] = Nil,
       bloomBy: Seq[String] = Nil): Manifest = {
     val pcols = partCols(partitionCol)
@@ -1801,7 +1857,8 @@ object AtomicTable {
            bloomBy.mkString(","))),
       dropPartitions,
       expectedVersion, retain, beforeCommit, operation = operation,
-      append = append, statsSchema = if (append) Some(rows.schema) else None,
+      append = append, appendSet = appendSet,
+      statsSchema = if (append || appendSet.nonEmpty) Some(rows.schema) else None,
       newFileStats = newFileStats,
       newSorted =
         if (sortedBy.isEmpty) Map.empty

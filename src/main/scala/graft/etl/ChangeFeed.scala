@@ -190,8 +190,7 @@ object ChangeFeed {
       dirs: Seq[String], schema: StructType): DataFrame = {
     val byTxn = dirs.sorted.groupBy(AtomicTable.txnDirOf)
     val raw = byTxn.toSeq.sortBy(_._1).map { case (txnDir, ds) =>
-      spark.read.option("basePath", s"$table/$txnDir")
-        .parquet(ds.map(d => s"$table/$d"): _*)
+      AtomicTable.txnScan(spark, table, txnDir, ds)
     }.reduce(_.unionByName(_))
     raw.select(raw.columns.map { c =>
       schema.fields.find(_.name == c) match {

@@ -8,9 +8,12 @@ import org.apache.spark.sql.functions._
   * upsert (`/root/reference/src/load.py:42-134`). The reference pulls the
   * whole target table into a Python dict and classifies row-by-row (its
   * acknowledged scaling cliff, `src/load.py:121-122`); here classification
-  * is one left-outer join and the new target state is an anti-join ∪
-  * incoming, both shuffle-partitioned on the merge keys — at 100 TB these
-  * become sort-merge joins co-partitioned by key, with no driver-side state.
+  * is one left-outer join, shuffle-partitioned on the merge keys — at
+  * 100 TB a sort-merge join co-partitioned by key, with no driver-side
+  * state. The new state of a partition with updates is [[upsert]]'s
+  * anti-join ∪ incoming; a partition that only gained rows needs neither:
+  * [[Pipeline.mergeFact]] appends its inserts, as the reference
+  * batch-inserts them (`src/load.py:79-84`).
   */
 object Merge {
 

@@ -325,10 +325,16 @@ object MergeInto {
     * Equal to [[AtomicTable.read]] when no vectors are outstanding. */
   def readMerged(spark: SparkSession, table: String, schema: StructType): DataFrame =
     AtomicTable.manifest(java.nio.file.Paths.get(table)) match {
-      case None => AtomicTable.read(spark, table, schema)
-      case Some(m) => AtomicTable.subtractDeletes(spark, table, schema, m,
-        AtomicTable.read(spark, table, schema))
+      case None => AtomicTable.emptyFrame(spark, schema)
+      case Some(m) => readMerged(spark, table, schema, m)
     }
+
+  /** The merged state of one already-read manifest `m`, for a caller
+    * that also plans from `m` (its delete vectors, its version). */
+  private[etl] def readMerged(spark: SparkSession, table: String,
+      schema: StructType, m: AtomicTable.Manifest): DataFrame =
+    AtomicTable.subtractDeletes(spark, table, schema, m,
+      AtomicTable.readManifest(spark, table, schema, m))
 
   /** Time travel over merged state: the table AS OF `version`, with the
     * delete vectors THAT VERSION carried subtracted (a later vector

@@ -20,9 +20,11 @@ import graft.model.Schemas.ExtractionState
   * response of the run as one batch frame ([[Normalize.fredBatch]]) so
   * the plan does not grow with the number of series; load evaluates it
   * exactly once, as the persisted classification of [[mergeFact]] that
-  * feeds both the run report and the partition rewrite. The load path
-  * does not sort the fact rows: the MERGE's dedup window reshuffles them
-  * anyway, and the writer orders each partition it rewrites. Phase
+  * feeds both the run report and the one staged write, which rewrites
+  * the source partitions that gained updates and appends to those that
+  * only gained rows. The load path does not sort the fact rows: the
+  * MERGE's dedup window reshuffles them anyway, and the writer orders
+  * each partition it writes. Phase
   * failures abort the run with a phase-tagged error; a single bad FRED
   * series is skipped, not fatal (O2, `src/main.py:41-47`).
   */
@@ -86,24 +88,39 @@ object Pipeline {
   }
 
   /** Load phase: join-based MERGE into the transactional parquet warehouse
-    * (AtomicTable), rewriting ONLY the source partitions that actually
-    * changed — the R1 hash-skip idea applied at the storage layer: a
-    * one-series revision must not rewrite the other sources' terabytes.
+    * (AtomicTable), writing ONLY what changed — the R1 hash-skip idea
+    * applied at the storage layer: a one-series revision must not rewrite
+    * the other sources' terabytes, and a day of new observations must not
+    * rewrite the history it lands next to.
     *
-    * The incoming plan is classified once: the classified frame is
-    * persisted, one `(source, action)` count over it yields both the
-    * report and the changed sources, and the upsert reads its incoming
-    * rows back from the same cache, so the fact plan is never
+    * The incoming plan is classified once against the table's merged
+    * state (data minus delete vectors, [[MergeInto.readMerged]]): the
+    * classified frame is persisted, one `(source, action)` count over it
+    * yields both the report and the plan below, and the write reads its
+    * incoming rows back from the same cache, so the fact plan is never
     * re-evaluated. The cache holds one run's fetch, so the count runs in
-    * a single task, with no exchange. The rewrite is rebalanced by source
-    * and sorted within tasks: one file per rewritten partition, unless AQE
-    * splits a skewed partition across tasks. The commit is AtomicTable's
-    * single version-pointer rename, matching the reference's
-    * one-transaction MERGE (`src/load.py:86-103`): a crash mid-write
-    * leaves the table readable at the previous version, and staged txn
-    * dirs never overwrite the files the plan is reading. */
+    * a single task, with no exchange. Per changed source partition:
+    *  - a source with any update, or with outstanding delete vectors, is
+    *    REWRITTEN: its stored rows minus the changed keys, plus the
+    *    changed rows; the commit clears the folded vectors, so a deleted
+    *    row stays deleted;
+    *  - every other changed source only gained rows, and APPENDS its
+    *    inserts as a new dir: its stored files are carried by reference,
+    *    with no second scan of the table and no join (the reference's
+    *    batch insert, `src/load.py:79-84`).
+    * On both paths a stored row whose incoming twin is unchanged is kept
+    * as stored, as in the reference, which never writes an unchanged row
+    * (`src/load.py:68-77`). Both kinds are one staged write, rebalanced
+    * by source and sorted within tasks (one file per written partition,
+    * unless AQE splits a skewed partition across tasks), and one commit:
+    * AtomicTable's single version-pointer rename, matching the
+    * reference's one-transaction MERGE (`src/load.py:86-103`). A crash
+    * mid-write leaves the table readable at the previous version, and
+    * staged txn dirs never overwrite the files the plan is reading. */
   def mergeFact(spark: SparkSession, incoming: DataFrame, factPath: String): Map[String, Long] = {
-    val existing = AtomicTable.read(spark, factPath, Schemas.fact)
+    val stored = AtomicTable.manifest(Paths.get(factPath))
+    val existing = stored.fold(AtomicTable.emptyFrame(spark, Schemas.fact))(
+      MergeInto.readMerged(spark, factPath, Schemas.fact, _))
     val keys = Seq("series_id", "date")
     val deduped = Merge.lastWinsByKey(incoming, keys, col("value").desc_nulls_last)
     val classified = Merge.classify(deduped, existing, keys, "value").persist()
@@ -111,15 +128,22 @@ object Pipeline {
       val counts = classified.coalesce(1).groupBy("source", "action").count().collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       // sources with at least one insert/update; unchanged partitions are
-      // neither read again nor rewritten
+      // neither read again nor written
       val changedSources = counts.collect { case (s, a, _) if a != "unchanged" => s }.toSet
       if (changedSources.nonEmpty) {
-        val changed = col("source").isInCollection(changedSources)
-        val newRows = Merge.upsert(existing.filter(changed),
-          classified.filter(changed).drop("action"), keys)
+        // an append may not land next to outstanding delete vectors, so
+        // such a partition is rewritten, as is any with an update
+        val rewritten = counts.collect { case (s, "update", _) => s }.toSet ++
+          changedSources.filter(s => stored.exists(_.deletes.get(s).exists(_.nonEmpty)))
+        val changes = classified.filter(col("action") =!= "unchanged").drop("action")
+        val rows =
+          if (rewritten.isEmpty) changes
+          else Merge.upsert(existing.filter(col("source").isInCollection(rewritten)),
+            changes, keys)
         AtomicTable.replacePartitions(spark, factPath,
-          newRows.hint("rebalance", col("source"))
-            .sortWithinPartitions("source", "series_id", "date"), "source")
+          rows.hint("rebalance", col("source"))
+            .sortWithinPartitions("source", "series_id", "date"), "source",
+          appendSet = changedSources -- rewritten)
       }
       def total(action: String) = counts.collect { case (_, `action`, n) => n }.sum
       Map("inserted" -> total("insert"), "updated" -> total("update"),

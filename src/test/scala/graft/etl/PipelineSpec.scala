@@ -34,6 +34,47 @@ class PipelineSpec extends SparkSuite {
       s"$base/state", s"$base/raw", s"$base/warehouse"), payloads)
   }
 
+  /** `payload` with one FRED observation, 2024-04-01 = 5.4, appended. */
+  private def withApril(payload: String): String = {
+    val march = payload.linesIterator.find(_.contains("\"date\": \"2024-03-01\"")).get.trim
+    val out = payload.replace(march, march.stripSuffix(",") +
+      """, {"date": "2024-04-01", "value": "5.4", """ +
+      """"realtime_start": "2024-04-01", "realtime_end": "9999-12-31"}""")
+    assert(out != payload)
+    out
+  }
+
+  /** The BLS fixture with one new observation, CUUR0000SA0 2024-04. */
+  private val blsWithApril: String = {
+    val march = """{"year": "2024", "period": "M03", "periodName": "March",    "value": "314.2""""
+    val out = Fixtures.blsPayload.replace(march,
+      """{"year": "2024", "period": "M04", "periodName": "April", "value": "315.0", """ +
+        "\"footnotes\": [{}]},\n        " + march)
+    assert(out != Fixtures.blsPayload)
+    out
+  }
+
+  /** Every parquet file of one fact partition, over all its dirs, with
+    * its modification time. */
+  private def partFiles(layout: Pipeline.Layout, source: String): Map[String, Long] = {
+    val root = java.nio.file.Paths.get(layout.factPath)
+    AtomicTable.manifest(root).get.partitions(source).flatMap { d =>
+      Files.list(root.resolve(d)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.toString.endsWith(".parquet"))
+        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis)
+    }.toMap
+  }
+
+  private def dirs(layout: Pipeline.Layout, source: String): Seq[String] =
+    AtomicTable.manifest(java.nio.file.Paths.get(layout.factPath)).get.partitions(source)
+
+  private def version(layout: Pipeline.Layout): Long =
+    AtomicTable.currentVersion(java.nio.file.Paths.get(layout.factPath)).getOrElse(0L)
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.select(graft.model.Schemas.fact.fieldNames.map(org.apache.spark.sql.functions.col): _*)
+      .collect().map(_.toString).sorted.toSeq
+
   test("first run inserts everything; rerun is fully unchanged (idempotent)") {
     val (layout, payloads) = freshLayout()
     val src = new FileSeriesSource(payloads)
@@ -107,22 +148,15 @@ class PipelineSpec extends SparkSuite {
     Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
     assert(Files.list(java.nio.file.Paths.get(layout.dimPath)).toArray
       .count(_.toString.endsWith(".parquet")) === 1, "the cold run writes dim_series as one file")
-    def partFiles(source: String): Map[String, Long] = {
-      val root = java.nio.file.Paths.get(layout.factPath)
-      val dir = root.resolve(AtomicTable.manifest(root).get.partitions(source).head)
-      Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(_.toString.endsWith(".parquet"))
-        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
-    }
-    val blsBefore = partFiles("BLS")
-    assert(blsBefore.size === 1 && partFiles("FRED").size === 1)
+    val blsBefore = partFiles(layout, "BLS")
+    assert(blsBefore.size === 1 && partFiles(layout, "FRED").size === 1)
     Files.writeString(payloads.resolve("fred_UNRATE.json"),
       Fixtures.fredPayload.replace("\"5.2\"", "\"6.1\""))
     val r = Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
     assert(r.factStats("updated") === 1)
-    assert(partFiles("BLS") === blsBefore,
+    assert(partFiles(layout, "BLS") === blsBefore,
       "BLS partition files must be byte-identical (carried by reference)")
-    assert(partFiles("FRED").size === 1, "a rewritten partition is one file")
+    assert(partFiles(layout, "FRED").size === 1, "a rewritten partition is one file")
     val fred = AtomicTable.read(spark, layout.factPath, graft.model.Schemas.fact)
       .filter("source = 'FRED' AND date = DATE'2024-03-01'").collect()
     assert(fred.head.getDouble(fred.head.fieldIndex("value")) === 6.1)
@@ -244,8 +278,139 @@ class PipelineSpec extends SparkSuite {
     Files.writeString(payloads.resolve("fred_UNRATE.json"),
       Fixtures.fredPayload.replace("\"5.2\"", "\"6.1\""))
     val revision = jobs()
-    assert((cold, unchanged, revision) === ((6, 6, 9)),
-      "jobs of a (cold, unchanged, one-series revision) run")
+    Files.writeString(payloads.resolve("fred_UNRATE.json"),
+      withApril(Fixtures.fredPayload.replace("\"5.2\"", "\"6.1\"")))
+    val insertOnly = jobs()
+    assert((cold, unchanged, revision, insertOnly) === ((6, 5, 8, 7)),
+      "jobs of a (cold, unchanged, one-series revision, one-row insert) run")
+  }
+
+  test("an insert-only run appends one dir and leaves the stored files alone") {
+    val (layout, payloads) = freshLayout()
+    val src = new FileSeriesSource(payloads)
+    Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
+    // the warehouse retains one version; a properties-only commit that
+    // tags itself keeps the pre-run version for the change feed's diff
+    val root = java.nio.file.Paths.get(layout.factPath)
+    AtomicTable.commitManifest(root, Map.empty,
+      properties = Map(AtomicTable.TagPrefix + "pre" -> (version(layout) + 1).toString))
+    val pre = AtomicTable.read(spark, layout.factPath, graft.model.Schemas.fact).collect()
+    val (fredFiles, blsFiles) = (partFiles(layout, "FRED"), partFiles(layout, "BLS"))
+    val (fredDirs, blsDirs) = (dirs(layout, "FRED"), dirs(layout, "BLS"))
+    val v = version(layout)
+
+    val payload = withApril(Fixtures.fredPayload)
+    Files.writeString(payloads.resolve("fred_UNRATE.json"), payload)
+    val r = Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
+    assert(r.factStats === Map("inserted" -> 1L, "updated" -> 0L, "unchanged" -> 9L))
+
+    assert(version(layout) === v + 1, "one commit")
+    val after = partFiles(layout, "FRED")
+    assert(fredFiles.forall { case (f, t) => after.get(f).contains(t) },
+      "the stored FRED files keep their paths and mtimes")
+    assert(after.size === fredFiles.size + 1, "the insert lands as one new file")
+    assert(dirs(layout, "FRED").size === fredDirs.size + 1 &&
+      dirs(layout, "FRED").startsWith(fredDirs), "FRED gains exactly one dir")
+    assert(partFiles(layout, "BLS") === blsFiles && dirs(layout, "BLS") === blsDirs)
+
+    val snapshot = spark.createDataFrame(pre.toSeq.asJava, graft.model.Schemas.fact)
+    assert(rowsOf(AtomicTable.read(spark, layout.factPath, graft.model.Schemas.fact)) ===
+      rowsOf(Merge.upsert(snapshot, factFrame(payload), Seq("series_id", "date"))))
+
+    val feed = ChangeFeed.changes(spark, layout.factPath, graft.model.Schemas.fact,
+      v + 1, v + 1, Seq("series_id", "date")).collect()
+    assert(feed.map(r => (r.getAs[String]("series_id"), r.getAs[java.sql.Date]("date").toString,
+      r.getAs[Double]("value"), r.getAs[String](ChangeFeed.ChangeTypeCol))).toSeq ===
+      Seq(("UNRATE", "2024-04-01", 5.4, "insert")))
+  }
+
+  test("a mixed run rewrites the updated source and appends the other, in one commit") {
+    val (layout, payloads) = freshLayout()
+    val src = new FileSeriesSource(payloads)
+    Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
+    val (blsFiles, blsDirs) = (partFiles(layout, "BLS"), dirs(layout, "BLS"))
+    val v = version(layout)
+
+    Files.writeString(payloads.resolve("fred_UNRATE.json"),
+      Fixtures.fredPayload.replace("\"5.2\"", "\"6.1\""))
+    Files.writeString(payloads.resolve("bls.json"), blsWithApril)
+    val r = Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
+    assert(r.factStats === Map("inserted" -> 1L, "updated" -> 1L, "unchanged" -> 8L))
+
+    assert(version(layout) === v + 1, "one commit")
+    assert(dirs(layout, "FRED").size === 1 && partFiles(layout, "FRED").size === 1,
+      "FRED is rewritten as one file")
+    assert(dirs(layout, "BLS").size === blsDirs.size + 1 &&
+      dirs(layout, "BLS").startsWith(blsDirs), "BLS gains one dir")
+    val after = partFiles(layout, "BLS")
+    assert(blsFiles.forall { case (f, t) => after.get(f).contains(t) } &&
+      after.size === blsFiles.size + 1, "BLS is appended, its stored files untouched")
+    val fact = AtomicTable.read(spark, layout.factPath, graft.model.Schemas.fact)
+    assert(fact.count() === 10)
+    assert(fact.filter("series_id = 'UNRATE' AND date = DATE'2024-03-01'")
+      .collect().head.getAs[Double]("value") === 6.1)
+    assert(fact.filter("series_id = 'CUUR0000SA0' AND date = DATE'2024-04-01'")
+      .collect().head.getAs[Double]("value") === 315.0)
+  }
+
+  test("mergeFact keeps vector-deleted rows deleted") {
+    val (layout, payloads) = freshLayout()
+    val src = new FileSeriesSource(payloads)
+    val schema = graft.model.Schemas.fact
+    val keys = Seq("series_id", "date")
+    Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
+    def deleteUnrate(date: String): Unit =
+      MergeInto.deleteKeysMor(spark, layout.factPath, schema,
+        spark.createDataFrame(java.util.List.of(
+          org.apache.spark.sql.Row("UNRATE", java.sql.Date.valueOf(date))),
+          org.apache.spark.sql.types.StructType(keys.map(schema(_)))),
+        keys, "source")
+    def fredDates(): Seq[String] = MergeInto.readMerged(spark, layout.factPath, schema)
+      .filter("source = 'FRED'").collect().map(_.getAs[java.sql.Date]("date").toString)
+      .sorted.toSeq
+    def deletes() = AtomicTable.manifest(java.nio.file.Paths.get(layout.factPath)).get.deletes
+
+    // a revision whose payload no longer carries the deleted January
+    deleteUnrate("2024-01-01")
+    assert(fredDates() === Seq("2024-02-01", "2024-03-01"))
+    val revised = Fixtures.fredPayload.linesIterator
+      .filterNot(_.contains("\"date\": \"2024-01-01\"")).mkString("\n")
+      .replace("\"5.2\"", "\"6.1\"")
+    Files.writeString(payloads.resolve("fred_UNRATE.json"), revised)
+    val r = Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
+    assert(r.factStats("updated") === 1)
+    assert(fredDates() === Seq("2024-02-01", "2024-03-01"), "January stays deleted")
+    assert(deletes().isEmpty, "the rewrite folded the vector")
+
+    // an insert-only run into a partition with a vector rewrites it
+    deleteUnrate("2024-02-01")
+    Files.writeString(payloads.resolve("fred_UNRATE.json"),
+      withApril(revised).linesIterator
+        .filterNot(_.contains("\"date\": \"2024-02-01\"")).mkString("\n"))
+    val r2 = Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
+    assert(r2.factStats === Map("inserted" -> 1L, "updated" -> 0L, "unchanged" -> 7L))
+    assert(fredDates() === Seq("2024-03-01", "2024-04-01"))
+    assert(deletes().isEmpty)
+    assert(dirs(layout, "FRED").size === 1, "the vectored partition is rewritten")
+    assert(rowsOf(AtomicTable.read(spark, layout.factPath, schema).filter("source = 'FRED'")) ===
+      rowsOf(MergeInto.readMerged(spark, layout.factPath, schema).filter("source = 'FRED'")))
+  }
+
+  test("reading a committed table starts no Spark job before an action") {
+    val (layout, payloads) = freshLayout()
+    val src = new FileSeriesSource(payloads)
+    Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
+    Files.writeString(payloads.resolve("fred_UNRATE.json"), withApril(Fixtures.fredPayload))
+    Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
+    assert(dirs(layout, "FRED").size === 2, "two txn dirs to read")
+    val schema = graft.model.Schemas.fact
+    val (fact, seen) = jobsOf(AtomicTable.read(spark, layout.factPath, schema))
+    assert(seen.isEmpty)
+    assert(fact.schema.map(f => f.name -> f.dataType) === schema.map(f => f.name -> f.dataType))
+    assert(fact.count() === 10)
+    val typo = schema.add("vlaue", org.apache.spark.sql.types.DoubleType)
+    val e = intercept[Exception](AtomicTable.read(spark, layout.factPath, typo))
+    assert(e.getMessage.contains("vlaue"))
   }
 
   test("mergeFact evaluates the fact plan once: one collect, at most one write") {
