@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — one JSON line with per-query seconds on
   * SPARK_GRAFT_SF_DIR. Each query is fully materialized through the noop
   * sink (forces every operator, unlike count() which can prune). A generic
@@ -15,17 +13,24 @@ import org.apache.spark.sql.SparkSession
   * bound a stall's damage to one pass per query. Single-pass wall is now
   * ~190 s at sf0.1, so two passes fit the driver budget that DNF'd the
   * wider r2-r3 surfaces. Override with SPARK_GRAFT_BENCH_PASSES. Raw
-  * per-pass numbers stay in the JSON for audit. */
+  * per-pass numbers stay in the JSON for audit.
+  *
+  * A run that throws is a failure, never a time: it is left out of
+  * `queries`, `medians` and `value`, named under `"failed"`, and the
+  * bench exits non-zero after writing its JSON. */
 object Bench {
+
+  /** Seconds `body` took, or what it threw. */
+  def timed(body: => Unit): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    try { body; Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => Left(e) }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt.max(1)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val builder = Session.builder()
     // Shuffle-partition sizing is DATA-SCALE CONFIGURATION, not an
     // engine constant: at the 500x corpus the 32-partition default
     // spills (text_bm25 122.7s -> 36.6s, dedup_minhash 80.7s ->
@@ -41,8 +46,6 @@ object Bench {
     val spark = sys.env.get("SPARK_GRAFT_INITIAL_PARTITIONS")
       .fold(builder)(n => builder.config(
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum", n))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -57,21 +60,23 @@ object Bench {
     // (SPARK_GRAFT_ONLY selects the group, SPARK_GRAFT_INITIAL_PARTITIONS
     // sets its width); see BASELINE.md round-12.
 
-    def materialize(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
+    val runs = scala.collection.mutable.Map.empty[String, Vector[Double]]
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def run(name: String)(body: => Unit): Unit = {
+      val t = timed(body)
       // drop caches a query persisted (LSH candidate tables) so heap
       // pressure never accumulates across the suite
       spark.catalog.clearCache()
       // progress to stderr (stdout stays the single JSON line): long runs
       // on this stall-prone host are otherwise indistinguishable from hangs
-      System.err.println(f"[bench] $name%-28s $sec%8.2fs")
-      sec
+      t match {
+        case Right(sec) =>
+          System.err.println(f"[bench] $name%-28s $sec%8.2fs")
+          runs(name) = runs.getOrElse(name, Vector.empty) :+ sec
+        case Left(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+      }
     }
 
     // Warmup: exercise scan/join/agg/sort codegen paths once, untimed.
@@ -101,8 +106,6 @@ object Bench {
     val controlPath = if (controlOn) tools.BenchControl.setup(spark) else ""
     val controlQs =
       if (controlOn) tools.BenchControl.queries(spark, controlPath) else Nil
-    val byControl = scala.collection.mutable.Map(
-      controlQs.map { case (n, _) => n -> Vector.empty[Double] }: _*)
     // I/O limb (frozen at round 14, tools/BenchControlIO.scala): the
     // compute control cannot see fs-stall windows (r13: drift 1.21 vs a
     // 15x commit-family inflation), so a small-file commit + cold point
@@ -112,33 +115,13 @@ object Bench {
     val ioCtx = if (controlOn) Some(tools.BenchControlIO.setup(spark)) else None
     val ioQs = ioCtx.map(c => tools.BenchControlIO.queries(spark, c))
       .getOrElse(Nil)
-    val byIo = scala.collection.mutable.Map(
-      ioQs.map { case (n, _) => n -> Vector.empty[Double] }: _*)
 
-    val byQuery = scala.collection.mutable.Map(
-      names.map(n => n -> Vector.empty[Double]): _*)
     for (_ <- 1 to passes) {
-      for ((cn, q) <- controlQs) {
-        val t0 = System.nanoTime()
-        try q().write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $cn failed: ${e.getMessage}")
-        }
-        val sec = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] $cn%-28s $sec%8.2fs")
-        byControl(cn) = byControl(cn) :+ sec
-      }
-      for ((cn, act) <- ioQs) {
-        val t0 = System.nanoTime()
-        try act()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $cn failed: ${e.getMessage}")
-        }
-        val sec = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] $cn%-28s $sec%8.2fs")
-        byIo(cn) = byIo(cn) :+ sec
-      }
-      for (n <- names) byQuery(n) = byQuery(n) :+ materialize(n)
+      for ((cn, q) <- controlQs)
+        run(cn)(q().write.format("noop").mode("overwrite").save())
+      for ((cn, act) <- ioQs) run(cn)(act())
+      for (n <- names) run(n)(SparkEntry.queries(n)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save())
     }
 
     def median(xs: Vector[Double]): Double = {
@@ -154,15 +137,17 @@ object Bench {
     // query in two of three passes, so the median still carries stall
     // time; the minimum of interleaved passes is the least-contended
     // observation of each query. Medians + raw passes stay in the JSON
-    // for audit.
-    val mins = names.map(n => n -> byQuery(n).min)
-    val medians = names.map(n => n -> median(byQuery(n)))
+    // for audit. A name with no successful run has no entry.
+    def minsOf(ns: Seq[String]): Seq[(String, Double)] =
+      ns.flatMap(n => runs.get(n).map(n -> _.min))
+    val mins = minsOf(names)
+    val medians = names.flatMap(n => runs.get(n).map(n -> median(_)))
     def obj(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
-    val raw = names.map { n =>
-      "\"" + n + "\":[" + byQuery(n).map(fmt).mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    val raw = names.flatMap(n => runs.get(n).map { xs =>
+      "\"" + n + "\":[" + xs.map(fmt).mkString(",") + "]"
+    }).mkString("{", ",", "}")
     val total = mins.map(_._2).sum
     val totalMedian = medians.map(_._2).sum
     // control block: per-query mins, the summed control_total, its ratio
@@ -170,13 +155,13 @@ object Bench {
     // (`value` stays the raw measurement; comparisons should read
     // `total_normalized` when control_drift strays from 1.0)
     val controlJson = if (controlQs.isEmpty) "" else {
-      val cmins = controlQs.map { case (n, _) => n -> byControl(n).min }
+      val cmins = minsOf(controlQs.map(_._1))
       val ctotal = cmins.map(_._2).sum
       val cref = sys.env.get("SPARK_GRAFT_CONTROL_REF").map(_.toDouble)
         .getOrElse(tools.BenchControl.Ref)
       val drift = ctotal / cref
       val ioJson = if (ioQs.isEmpty) "" else {
-        val iomins = ioQs.map { case (n, _) => n -> byIo(n).min }
+        val iomins = minsOf(ioQs.map(_._1))
         val iototal = iomins.map(_._2).sum
         val ioref = sys.env.get("SPARK_GRAFT_CONTROL_IO_REF").map(_.toDouble)
           .getOrElse(tools.BenchControlIO.Ref)
@@ -184,7 +169,9 @@ object Bench {
       }
       s""","control":${obj(cmins)},"control_total":${fmt(ctotal)},"control_ref":${fmt(cref)},"control_drift":${fmt(drift)},"total_normalized":${fmt(total / drift)}$ioJson"""
     }
-    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${obj(mins)},"medians":${obj(medians)},"total_median":${fmt(totalMedian)},"passes":$raw,"n_passes":$passes$controlJson,"sf":"$sfDir"}"""
+    val failedJson = if (failed.isEmpty) ""
+      else failed.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]")
+    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${obj(mins)},"medians":${obj(medians)},"total_median":${fmt(totalMedian)},"passes":$raw,"n_passes":$passes$controlJson$failedJson,"sf":"$sfDir"}"""
     println(json)
     // ALSO persist the full JSON as a repo artifact: the driver's capture
     // of stdout has truncated the tail before (r6 lost its headline), and
@@ -196,5 +183,6 @@ object Bench {
       System.err.println(s"[bench] artifact write failed: ${e.getMessage}")
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

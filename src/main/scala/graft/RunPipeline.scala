@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Paths
 import java.time.{Instant, LocalDate, ZoneOffset}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.Pipeline
 import graft.ingest.{FileSeriesSource, HttpSeriesSource, SeriesSource}
 import graft.model.SeriesRegistry
@@ -30,14 +28,7 @@ object RunPipeline {
           sys.error("FRED_API_KEY required for live mode; pass payloadsDir for offline")),
         sys.env.get("BLS_API_KEY"))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val now = Instant.now()

@@ -95,11 +95,12 @@ object AtomicTable {
 
   /** partitions: partition value -> ORDERED data dirs relative to the
     * table root, in append order. A replace commit installs a fresh
-    * single-dir list; an APPEND commit ([[commitManifest]] with
-    * `append = true`) extends the list — INSERT INTO adds a dir and
-    * never touches existing bytes, so two concurrent appends into the
-    * same partition both survive (they merge at the list level), which
-    * is the standard SQL/Delta/Iceberg append contract.
+    * single-dir list; an APPEND commit (a partition for which
+    * [[commitManifest]]'s `appends` holds) extends the list — INSERT
+    * INTO adds a dir and never touches existing bytes, so two concurrent
+    * appends into the same partition both survive (they merge at the
+    * list level), which is the standard SQL/Delta/Iceberg append
+    * contract.
     * properties: small KV payload committed ATOMICALLY with the data — the
     * streaming sink stores its last batch epoch here, which is what makes
     * foreachBatch replay idempotent (see graft.streaming.Streams).
@@ -1383,7 +1384,9 @@ object AtomicTable {
     * from a second JVM. `beforeCommit` runs once, after the merged
     * manifest is computed but before any claim attempt — throwing there
     * simulates a crash at the worst moment and must leave the table
-    * unchanged. */
+    * unchanged. A written partition for which `appends` holds adds its
+    * dirs to its current list instead of replacing it, and its zone map
+    * merges under `statsSchema`'s column types. */
   def commitManifest(root: Path, written: Map[String, Seq[String]],
       newStats: Map[String, PartStats] = Map.empty,
       properties: Map[String, String] = Map.empty,
@@ -1392,8 +1395,7 @@ object AtomicTable {
       beforeCommit: () => Unit = () => (),
       newDeletes: Map[String, Seq[String]] = Map.empty,
       operation: String = "write",
-      append: Boolean = false,
-      appendSet: Set[String] = Set.empty,
+      appends: String => Boolean = _ => false,
       statsSchema: Option[StructType] = None,
       newFiles: Map[String, Seq[String]] = Map.empty,
       newFileStats: Map[String, Map[String, PartStats]] = Map.empty,
@@ -1417,11 +1419,6 @@ object AtomicTable {
         val prevParts = prev.map(_.partitions).getOrElse(Map.empty)
         val prevStats = prev.map(_.stats).getOrElse(Map.empty)
         val prevDels = prev.map(_.deletes).getOrElse(Map.empty)
-        // `append` appends every written partition; `appendSet` appends
-        // a subset while the rest replace (the row-level rewrite's
-        // cross-partition row moves: scanned partitions replace, move
-        // targets append)
-        def appends(p: String): Boolean = append || appendSet(p)
         val blocked = written.keySet
           .filter(p => appends(p) && prevDels.get(p).exists(_.nonEmpty))
         if (blocked.nonEmpty) throw new IllegalStateException(
@@ -1708,10 +1705,10 @@ object AtomicTable {
     }
   }
 
-  /** `appendSet`: partitions whose staged dirs APPEND to their current
-    * ones (as with `append`) while every other written partition is
-    * replaced — one staged write and one commit for a MERGE that
-    * rewrites some partitions and only inserts into others. */
+  /** `appends`: the written partitions whose staged dirs APPEND to their
+    * current ones; every other written partition is replaced — one
+    * staged write and one commit for a MERGE that rewrites some
+    * partitions and only inserts into others. */
   /** `sortedBy`: the caller asserts every staged FILE's rows are sorted
     * by these columns (ascending, nulls first) — recorded per dir so the
     * DSv2 scan can report output ordering. Only pass it when the input
@@ -1725,8 +1722,7 @@ object AtomicTable {
       dropPartitions: Set[String] = Set.empty,
       expectedVersion: Option[Long] = None,
       operation: String = "write",
-      append: Boolean = false,
-      appendSet: Set[String] = Set.empty,
+      appends: String => Boolean = _ => false,
       sortedBy: Seq[String] = Nil,
       bloomBy: Seq[String] = Nil): Manifest = {
     val pcols = partCols(partitionCol)
@@ -1758,14 +1754,16 @@ object AtomicTable {
     staged.write.partitionBy(pcols: _*).parquet(root.resolve("data").resolve(txn).toString)
     val txnDir = root.resolve("data").resolve(txn)
     val written = stagedPartitionDirs(txnDir, txn, pcols)
+    // the staged files, listed once, before any bloom sidecar lands
+    // next to them, and read with a footer schema: no inference job
+    lazy val stagedScan = txnScan(spark, table, s"data/$txn",
+      written.values.flatten.toSeq)
     // rebuild bloom sidecars for the rewritten files (a rewrite that
     // dropped them would silently lose point-lookup skipping): one
     // grouped aggregation over the staged bytes, one 8 KiB buffer per
     // (file, column) to the driver — bounded by the rewrite's own size
     if (bloomBy.nonEmpty && written.nonEmpty)
-      writeBloomSidecars(
-        spark.read.option("basePath", txnDir.toString)
-          .parquet(txnDir.toString), bloomBy)
+      writeBloomSidecars(stagedScan, bloomBy)
     val (newStats: Map[String, PartStats],
          newFileStats: Map[String, Map[String, PartStats]]) =
       if (statsColumns.isEmpty || written.isEmpty)
@@ -1809,10 +1807,8 @@ object AtomicTable {
         // min/max ignore nulls the same way)
         val fileExpr = org.apache.spark.sql.functions.regexp_extract(
           fname, ".*/([^/]+)$", 1)
-        val staged = spark.read.option("basePath", txnDir.toString)
-          .parquet(txnDir.toString)
-          .select(statsColumns.map(col) ++
-            Seq(dirExpr.as("_dir"), fileExpr.as("_file")): _*)
+        val staged = stagedScan.select(statsColumns.map(col) ++
+          Seq(dirExpr.as("_dir"), fileExpr.as("_file")): _*)
         val aggs = Seq(org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as("_rows")) ++
           statsColumns.flatMap(c => Seq(
@@ -1857,8 +1853,7 @@ object AtomicTable {
            bloomBy.mkString(","))),
       dropPartitions,
       expectedVersion, retain, beforeCommit, operation = operation,
-      append = append, appendSet = appendSet,
-      statsSchema = if (append || appendSet.nonEmpty) Some(rows.schema) else None,
+      appends = appends, statsSchema = Some(rows.schema),
       newFileStats = newFileStats,
       newSorted =
         if (sortedBy.isEmpty) Map.empty
@@ -1904,7 +1899,7 @@ object AtomicTable {
       operation: String = "append"): Manifest =
     replacePartitions(spark, table, rows, partitionCol,
       properties = properties, retain = retain,
-      statsColumns = statsColumns, operation = operation, append = true)
+      statsColumns = statsColumns, operation = operation, appends = _ => true)
 
   /** Bin-pack the table's files: rewrite every partition with one task per
     * partition value, committed through the same atomic protocol. Many

@@ -143,7 +143,7 @@ object Pipeline {
         AtomicTable.replacePartitions(spark, factPath,
           rows.hint("rebalance", col("source"))
             .sortWithinPartitions("source", "series_id", "date"), "source",
-          appendSet = changedSources -- rewritten)
+          appends = changedSources -- rewritten)
       }
       def total(action: String) = counts.collect { case (_, `action`, n) => n }.sum
       Map("inserted" -> total("insert"), "updated" -> total("update"),

@@ -213,7 +213,7 @@ private[sources] class GraftGroupReplaceWrite(root: String,
       dropPartitions = state.scanned -- staged.written.keySet,
       retain = retain, expectedVersion = Some(state.readVersion),
       operation = cmd.name.toLowerCase,
-      appendSet = moved, statsSchema = Some(schema),
+      appends = moved, statsSchema = Some(schema),
       newFiles = staged.files,
       newFileStats = GraftWriteCommit.fileStats(staged, messages))
     ()

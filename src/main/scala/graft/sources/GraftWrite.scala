@@ -419,7 +419,7 @@ private[sources] class GraftBatchWrite(root: String, schema: StructType,
       case None =>
         try AtomicTable.commitManifest(rootPath, staged.written,
           newStats = newStats, retain = retain, newFiles = staged.files,
-          newFileStats = fStats, append = true, statsSchema = Some(schema),
+          newFileStats = fStats, appends = _ => true, statsSchema = Some(schema),
           operation = "append", newSorted = sortMarkers(staged),
           properties = bloomProps)
         catch {
@@ -433,7 +433,7 @@ private[sources] class GraftBatchWrite(root: String, schema: StructType,
               partitionCol, statsColumns)
             AtomicTable.commitManifest(rootPath, staged.written,
               newStats = newStats, retain = retain, newFiles = staged.files,
-              newFileStats = fStats, append = true, statsSchema = Some(schema),
+              newFileStats = fStats, appends = _ => true, statsSchema = Some(schema),
               operation = "append", newSorted = sortMarkers(staged),
               properties = bloomProps)
         }

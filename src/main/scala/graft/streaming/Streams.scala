@@ -117,7 +117,7 @@ object Streams {
     * path, proving the stateful session operator end-to-end. */
   def sessionsAvailableNow(spark: SparkSession, dir: String,
       queryName: String = "ev_session_stream_out"): DataFrame = {
-    // MEASURED, REJECTED (r15, tools/SessionPlanProbe): the local-partition
+    // MEASURED, REJECTED (r15, OPTIMIZATION_r15.md): the local-partition
     // session merge flag (spark.sql.streaming.sessionWindow.merge.sessions
     // .in.local.partition=true) was plan-diffed — the default plan ALREADY
     // partial-aggregates (session_window, user_id) before the exchange, and

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.GraftBloom
@@ -28,16 +27,12 @@ object BloomProbeBench {
     val nFiles = args.headOption.map(_.toInt).getOrElse(10000)
     val rowsPer = args.drop(1).headOption.map(_.toInt).getOrElse(20)
     val simMs = args.drop(2).headOption.map(_.toLong).getOrElse(0L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-bloom-probe")
+    val spark = graft.Session.builder()
       // wide shuffle + no coalescing: the salted write must actually
       // fan out to ~nFiles tasks at this tool's toy data volume (AQE
       // would rightly fold a few-KB shuffle back to one task)
       .config("spark.sql.shuffle.partitions", math.max(32, nFiles).toString)
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
 
     val warehouse = java.nio.file.Files

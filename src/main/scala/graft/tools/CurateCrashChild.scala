@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.Streams
 
 /** Second-JVM driver for the curated-ingest crash test: runs the
@@ -19,13 +17,7 @@ object CurateCrashChild {
   def main(args: Array[String]): Unit = {
     val Array(staging, corpus, index, ckpt, crashAtStr) = args.take(5)
     val crashAt = crashAtStr.toLong
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-curate-crash-child")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder(4).getOrCreate()
     Streams.curatedIngestAvailableNow(spark, staging, corpus, index, ckpt,
       afterIndexAppend = id =>
         if (id == crashAt) {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Forked-JVM writer for the cross-process SQL INSERT race
   * (sources/CrossProcessSqlSpec): its own SparkSession, its own graft
   * catalog registration over the SHARED warehouse dir, N INSERTs into
@@ -10,14 +8,9 @@ import org.apache.spark.sql.SparkSession
 object SqlInsertRaceChild {
   def main(args: Array[String]): Unit = {
     val Array(warehouse, cat, tag, nStr) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-sql-race-$tag")
-      .config("spark.sql.shuffle.partitions", "2")
+    val spark = graft.Session.builder(2)
       .config(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
       .config(s"spark.sql.catalog.$cat.root", warehouse)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
       for (k <- 1 to nStr.toInt) {

@@ -13,11 +13,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val prior = SparkSession.getDefaultSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.builder(2)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     try {

@@ -2,7 +2,7 @@ package graft
 
 /** Plan-regression guards: the physical-plan properties the engine's
   * scale story depends on, asserted so refactors can't silently lose
-  * them. (The human-readable audit is graft.tools.ExplainAudit.) */
+  * them. (The human-readable audit is `graft.tools.Probe plan`.) */
 class PlanAuditSpec extends SparkSuite {
 
   private def plan(name: String): String =

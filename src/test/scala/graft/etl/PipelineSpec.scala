@@ -460,4 +460,24 @@ class PipelineSpec extends SparkSuite {
       assert(Pipeline.mergeDim(spark, nameless, nulls.dimPath) ===
         Map("inserted" -> 1L, "unchanged" -> 0L))
   }
+
+  test("replacePartitions reads its staged dir for zone maps and blooms with no inference job") {
+    val table = Files.createTempDirectory("graft-staged").resolve("t").toString
+    val rows = spark.range(0, 90).selectExpr("id AS k", "CAST(id % 3 AS STRING) AS p")
+    // the staged write, then the zone-map aggregation's two adaptive
+    // stages; no job infers the staged files' schema
+    val (stats, seen) = jobsOf(AtomicTable.replacePartitions(spark, table, rows, "p",
+      statsColumns = Seq("k")).stats)
+    assert(seen.size === 3 && seen.head === "parquet" && seen.count(_ == "parquet") === 1,
+      seen)
+    val expected = (0 to 2).map(r => r.toString ->
+      AtomicTable.PartStats(30, Map("k" -> r.toString), Map("k" -> (87 + r).toString))).toMap
+    assert(stats === expected)
+    // zone maps and blooms in one commit: both read the staged files as
+    // listed before the bloom sidecars landed next to them
+    val both = AtomicTable.replacePartitions(spark, table, rows, "p",
+      statsColumns = Seq("k"), bloomBy = Seq("k"))
+    assert(both.stats === expected)
+    assert(spark.read.format("graft").load(table).where("k = 40").count() === 1)
+  }
 }
