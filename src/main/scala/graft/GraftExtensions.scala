@@ -17,10 +17,13 @@ import graft.ops.{Dedup, TextStats}
   *   // or .withExtensions(new GraftExtensions)
   * }}}
   *
-  * The DataFrame-side helpers in HashExprs/Dedup register the same
-  * functions lazily per session; this class is the declarative form for
-  * cluster deployments (extensions survive session cloning and appear in
-  * every thread's session).
+  * This is the pure-SQL surface only, with each function's parameters
+  * fixed (the engine's hash coefficients, w = 3, the registry's
+  * stopword lists). DataFrame code builds the same expressions directly
+  * as Columns through `graft.functions`, with any parameters, and needs
+  * no registration. The as-of planner strategy is not injected here: no
+  * SQL text produces its `AsOfJoinNode`, and `AsOf.joinPriorExec`
+  * installs the strategy on first use in any session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -51,9 +54,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_word_bigrams"),
       new ExpressionInfo(classOf[TextExprs.WordBigrams].getName, "graft_word_bigrams"),
       (exprs: Seq[Expression]) => TextExprs.WordBigrams(exprs.head)))
-    // whole-operator extension: plans graft.plans.AsOfJoinNode into the
-    // streaming-merge AsOfJoinExec (AsOf.joinPriorExec installs the same
-    // strategy lazily via spark.experimental for extension-less sessions)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }

@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -12,7 +15,11 @@ import java.nio.file.{Files, Paths}
   *     reference-parity first, general batch next, known-expensive batch
   *     after, streaming (tens of seconds of fixed machinery each) last —
   *     so an overrun only ever sacrifices the most expensive extension
-  *     queries. */
+  *     queries.
+  *
+  * A query that throws is reported, never swallowed: its name is logged
+  * when it fails and again after every other output is written, and the
+  * main exits 1 as `Bench` does. */
 object Verify {
 
   /** Known-expensive batch queries, deferred until after everything cheap
@@ -73,18 +80,27 @@ object Verify {
     // The driver never sets it, so the contract is unchanged.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val fns = SparkEntry.queries
-    orderedNames.filter(n => only.forall(_.contains(n))).foreach { name =>
-      val t0 = System.nanoTime()
-      try fns(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      spark.catalog.clearCache() // per-query caches must not accumulate
-      System.err.println(
-        f"[verify] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-    }
+    val failed = dump(spark, sfDir, outDir,
+      orderedNames.filter(n => only.forall(_.contains(n))), SparkEntry.queries)
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
+
+  /** Writes each named query's result to `outDir/<name>` as parquet, in
+    * order, and returns the names whose query threw. A failure does not
+    * stop the loop: every other output is still written. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String, names: Seq[String],
+      fns: String => (SparkSession, String) => DataFrame): Seq[String] =
+    names.filter { name =>
+      val run = Bench.timed(fns(name)(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name"))
+      spark.catalog.clearCache() // per-query caches must not accumulate
+      run match {
+        case Right(sec) => System.err.println(f"[verify] $name%-28s $sec%8.2fs")
+        case Left(e) => System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+      run.isLeft
+    }
 }

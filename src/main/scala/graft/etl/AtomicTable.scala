@@ -5,6 +5,7 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
@@ -223,28 +224,35 @@ object AtomicTable {
   private[graft] val blobReadLog =
     new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
+  // Jackson decoders shared by the root and blob readers
+  private def strMap(node: JsonNode): Map[String, String] =
+    node.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap
+  private def strListMap(node: JsonNode): Map[String, Seq[String]] =
+    node.fields().asScala.map { e =>
+      // a plain string is a legacy single-dir entry; an array is the
+      // current ordered-list form
+      e.getKey -> (if (e.getValue.isArray)
+        e.getValue.elements().asScala.map(_.asText).toSeq
+      else Seq(e.getValue.asText))
+    }.toMap
+  private def partStatsOf(v: JsonNode): PartStats =
+    PartStats(v.get("rows").asLong,
+      Option(v.get("mins")).map(strMap).getOrElse(Map.empty),
+      Option(v.get("maxs")).map(strMap).getOrElse(Map.empty))
+  private def fileStatsOf(node: JsonNode): Map[String, Map[String, PartStats]] =
+    node.fields().asScala.map { e =>
+      e.getKey -> e.getValue.fields().asScala
+        .map(f => f.getKey -> partStatsOf(f.getValue)).toMap
+    }.toMap
+
   private def loadBlob(root: Path, name: String): PartBlob = {
     if (recordBlobReads) blobReadLog.add(name)
     val n = mapper.readTree(Files.readString(blobsDir(root).resolve(name)))
-    def strMap(node: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
-      node.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap
-    def strListMap(node: com.fasterxml.jackson.databind.JsonNode)
-        : Map[String, Seq[String]] =
-      node.fields().asScala.map { e =>
-        e.getKey -> e.getValue.elements().asScala.map(_.asText).toSeq
-      }.toMap
-    def partStatsOf(v: com.fasterxml.jackson.databind.JsonNode): PartStats =
-      PartStats(v.get("rows").asLong,
-        Option(v.get("mins")).map(strMap).getOrElse(Map.empty),
-        Option(v.get("maxs")).map(strMap).getOrElse(Map.empty))
     PartBlob(
       Option(n.get("files")).map(strListMap).getOrElse(Map.empty),
       Option(n.get("bytes")).map(_.fields().asScala
         .map(e => e.getKey -> e.getValue.asLong).toMap).getOrElse(Map.empty),
-      Option(n.get("fileStats")).map(_.fields().asScala.map { e =>
-        e.getKey -> e.getValue.fields().asScala
-          .map(f => f.getKey -> partStatsOf(f.getValue)).toMap
-      }.toMap).getOrElse(Map.empty),
+      Option(n.get("fileStats")).map(fileStatsOf).getOrElse(Map.empty),
       Option(n.get("sorted")).map(strMap).getOrElse(Map.empty))
   }
 
@@ -408,8 +416,6 @@ object AtomicTable {
     }
 
   /** A specific version's manifest ROOT (O(partitions), zero blob
-    * reads). Format-1 files parse in full and ride along as `inline`. */
-  /** A specific version's manifest ROOT (O(partitions), zero blob
     * reads). Tree parse, DELIBERATELY: an A/B at the 100k-partition
     * root (RootScaleBench r13) measured Jackson's DOM readTree at
     * 354 ms warm vs 732 ms for a hand-rolled streaming-token walk —
@@ -418,24 +424,9 @@ object AtomicTable {
     * parse in full and ride along as `inline`. */
   def rootAt(root: Path, v: Long): ManifestRoot = {
     val n = mapper.readTree(Files.readString(manifestFile(root, v)))
-    val props = Option(n.get("properties")).map(_.fields().asScala
-      .map(e => e.getKey -> e.getValue.asText).toMap).getOrElse(Map.empty)
-    def strMap(node: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
-      node.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap
-    val stats = Option(n.get("stats")).map(_.fields().asScala.map { e =>
-      e.getKey -> PartStats(e.getValue.get("rows").asLong,
-        Option(e.getValue.get("mins")).map(strMap).getOrElse(Map.empty),
-        Option(e.getValue.get("maxs")).map(strMap).getOrElse(Map.empty))
-    }.toMap).getOrElse(Map.empty)
-    def strListMap(node: com.fasterxml.jackson.databind.JsonNode)
-        : Map[String, Seq[String]] =
-      node.fields().asScala.map { e =>
-        // a plain string is a legacy single-dir entry; an array is the
-        // current ordered-list form
-        e.getKey -> (if (e.getValue.isArray)
-          e.getValue.elements().asScala.map(_.asText).toSeq
-        else Seq(e.getValue.asText))
-      }.toMap
+    val props = Option(n.get("properties")).map(strMap).getOrElse(Map.empty)
+    val stats = Option(n.get("stats")).map(_.fields().asScala
+      .map(e => e.getKey -> partStatsOf(e.getValue)).toMap).getOrElse(Map.empty)
     val deletes = Option(n.get("deletes")).map(strListMap)
       .getOrElse(Map.empty[String, Seq[String]])
     val files = Option(n.get("files")).map(strListMap)
@@ -443,14 +434,8 @@ object AtomicTable {
     val bytes = Option(n.get("bytes")).map(_.fields().asScala
       .map(e => e.getKey -> e.getValue.asLong).toMap)
       .getOrElse(Map.empty[String, Long])
-    def partStatsOf(v: com.fasterxml.jackson.databind.JsonNode): PartStats =
-      PartStats(v.get("rows").asLong,
-        Option(v.get("mins")).map(strMap).getOrElse(Map.empty),
-        Option(v.get("maxs")).map(strMap).getOrElse(Map.empty))
-    val fileStats = Option(n.get("fileStats")).map(_.fields().asScala.map { e =>
-      e.getKey -> e.getValue.fields().asScala
-        .map(f => f.getKey -> partStatsOf(f.getValue)).toMap
-    }.toMap).getOrElse(Map.empty[String, Map[String, PartStats]])
+    val fileStats = Option(n.get("fileStats")).map(fileStatsOf)
+      .getOrElse(Map.empty[String, Map[String, PartStats]])
     val sorted = Option(n.get("sorted")).map(strMap)
       .getOrElse(Map.empty[String, String])
     val version = n.get("version").asLong

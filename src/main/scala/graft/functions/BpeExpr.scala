@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graftshim.Shims.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -92,15 +91,6 @@ object BpeExpr {
     override def prettyName: String = "graft_bpe_subwords"
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("graft_bpe_subwords")))
-      reg.createOrReplaceTempFunction(
-        "graft_bpe_subwords", exprs => BpeSubwords(exprs(0), exprs(1)), "built-in")
-  }
-
-  def subwords(words: Column, merges: Seq[(String, String)]): Column = {
-    register(SparkSession.active)
-    call_function("graft_bpe_subwords", words, lit(encodeMerges(merges)))
-  }
+  def subwords(words: Column, merges: Seq[(String, String)]): Column =
+    column(BpeSubwords(expression(words), Literal(encodeMerges(merges))))
 }

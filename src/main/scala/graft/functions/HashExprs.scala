@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.graftshim.Shims.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Custom Catalyst expressions for the hash-sketch operators.
@@ -258,45 +258,14 @@ object HashExprs {
     override def prettyName: String = "graft_rplsh_buckets"
   }
 
-  /** Re-register only when the parameters actually changed: these
-    * builders close over hash coefficients / planes, so a blind replace
-    * is needed on parameter change but logs a "replaced a previously
-    * registered function" WARN on every no-op repeat. Keyed on the LIVE
-    * session object via a WeakHashMap — identityHashCode keying could be
-    * reused by a fresh session after the old one is GC'd, silently
-    * skipping a registration the new session never had (and entries for
-    * dead sessions would pile up forever); weak keys make dead sessions'
-    * entries collectable and a never-seen session always registers. */
-  private val lastReg =
-    new java.util.WeakHashMap[SparkSession, Map[String, Any]]()
+  /** Column builders: each constructs its expression with its
+    * parameters bound, so two builders with different parameters stay
+    * distinct in one plan. */
+  def minhashSig(shingles: Column, a: IndexedSeq[Long], b: IndexedSeq[Long],
+      p: Long): Column =
+    column(MinHashSig(expression(shingles), a, b, p))
 
-  /** Shared registration seam for the expression modules in this package
-    * (same idempotence semantics as the local registrations). */
-  private[functions] def registerNamed(spark: SparkSession, name: String,
-      params: Any)(builder: Seq[Expression] => Expression): Unit =
-    registerIfChanged(spark, name, params)(builder)
-
-  private def registerIfChanged(spark: SparkSession, name: String, params: Any)(
-      builder: Seq[Expression] => Expression): Unit = lastReg.synchronized {
-    val seen = lastReg.getOrDefault(spark, Map.empty)
-    if (!seen.get(name).contains(params)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-      lastReg.put(spark, seen.updated(name, params))
-    }
-  }
-
-  /** Register both as SQL temp functions on the session and return Column
-    * builders (the function-registry route is backend-stable in Spark 4). */
-  def register(spark: SparkSession, a: IndexedSeq[Long], b: IndexedSeq[Long], p: Long): Unit = {
-    registerIfChanged(spark, "graft_minhash_sig", (a, b, p))(
-      exprs => MinHashSig(exprs.head, a, b, p))
-    registerIfChanged(spark, "graft_simhash32", ())(
-      exprs => SimHash32(exprs.head))
-  }
-
-  def minhashSig(spark: SparkSession, shinglesCol: String): Column =
-    expr(s"graft_minhash_sig($shinglesCol)")
+  def simhash32(tokens: Column): Column = column(SimHash32(expression(tokens)))
 
   /** Distinct word w-grams of a document in first-occurrence order, with
     * the same tokenization as [[MinHashDoc]] (trim 0x20, split on \s+)
@@ -360,19 +329,10 @@ object HashExprs {
     override def prettyName: String = "graft_word_ngrams"
   }
 
-  def registerWordNgrams(spark: SparkSession, w: Int): Unit =
-    registerIfChanged(spark, "graft_word_ngrams", w)(
-      exprs => WordNgrams(exprs.head, w))
+  def wordNgrams(text: Column, w: Int): Column = column(WordNgrams(expression(text), w))
 
-  def wordNgrams(spark: SparkSession, textCol: String): Column =
-    expr(s"graft_word_ngrams($textCol)")
-
-  def registerWordNgramsAll(spark: SparkSession, w: Int): Unit =
-    registerIfChanged(spark, "graft_word_ngrams_all", w)(
-      exprs => WordNgramsAll(exprs.head, w))
-
-  def wordNgramsAll(spark: SparkSession, textCol: String): Column =
-    expr(s"graft_word_ngrams_all($textCol)")
+  def wordNgramsAll(text: Column, w: Int): Column =
+    column(WordNgramsAll(expression(text), w))
 
   /** POSITIONAL word w-grams: every gram in token order (index i = gram
     * starting at token i — what `posexplode` turns into (pos, gram)
@@ -427,23 +387,11 @@ object HashExprs {
     override def prettyName: String = "graft_word_ngrams_all"
   }
 
-  def registerMinHashDoc(spark: SparkSession, w: Int, a: IndexedSeq[Long],
-      b: IndexedSeq[Long], p: Long): Unit =
-    registerIfChanged(spark, "graft_minhash_doc", (w, a, b, p))(
-      exprs => MinHashDoc(exprs.head, w, a, b, p))
+  def minhashDoc(text: Column, w: Int, a: IndexedSeq[Long], b: IndexedSeq[Long],
+      p: Long): Column =
+    column(MinHashDoc(expression(text), w, a, b, p))
 
-  def minhashDoc(spark: SparkSession, textCol: String): Column =
-    expr(s"graft_minhash_doc($textCol)")
-
-  def simhash32(spark: SparkSession, tokensCol: String): Column =
-    expr(s"graft_simhash32($tokensCol)")
-
-  def registerRpLsh(spark: SparkSession, planes: Array[Array[Double]],
-      bitsPerBand: Int): Unit =
-    registerIfChanged(spark, "graft_rplsh_buckets",
-      (planes.map(_.toSeq).toSeq, bitsPerBand))(
-      exprs => RpLshBuckets(exprs.head, planes, bitsPerBand))
-
-  def rpLshBuckets(spark: SparkSession, embCol: String): Column =
-    expr(s"graft_rplsh_buckets($embCol)")
+  def rpLshBuckets(embedding: Column, planes: Array[Array[Double]],
+      bitsPerBand: Int): Column =
+    column(RpLshBuckets(expression(embedding), planes, bitsPerBand))
 }

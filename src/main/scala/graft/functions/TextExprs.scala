@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.graftshim.Shims.{column, expression}
 import org.apache.spark.sql.types._
 
 /** One-pass text-signal extraction for the quality/lang-ID family.
@@ -248,21 +248,10 @@ object TextExprs {
     override def prettyName: String = "graft_word_bigrams"
   }
 
-  def register(spark: SparkSession, langWords: Seq[Seq[String]]): Unit = {
-    HashExprs.registerNamed(spark, "graft_text_signals", langWords)(
-      exprs => TextSignals(exprs.head, langWords))
-    HashExprs.registerNamed(spark, "graft_alpha_tokens", ())(
-      exprs => AlphaTokens(exprs.head))
-    HashExprs.registerNamed(spark, "graft_word_bigrams", ())(
-      exprs => WordBigrams(exprs.head))
-  }
+  def textSignals(text: Column, langWords: Seq[Seq[String]]): Column =
+    column(TextSignals(expression(text), langWords))
 
-  def textSignals(spark: SparkSession, textCol: String): Column =
-    expr(s"graft_text_signals($textCol)")
+  def alphaTokens(text: Column): Column = column(AlphaTokens(expression(text)))
 
-  def alphaTokens(spark: SparkSession, textCol: String): Column =
-    expr(s"graft_alpha_tokens($textCol)")
-
-  def wordBigrams(spark: SparkSession, toksCol: String): Column =
-    expr(s"graft_word_bigrams($toksCol)")
+  def wordBigrams(tokens: Column): Column = column(WordBigrams(expression(tokens)))
 }

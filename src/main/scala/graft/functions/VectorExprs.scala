@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.Shims.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native vector arithmetic for the similarity operators.
@@ -198,39 +197,10 @@ object VectorExprs {
     override def prettyName: String = "graft_jl_project"
   }
 
-  /** Idempotent per-session registration. Registers each function at most
-    * once per session: blind createOrReplaceTempFunction on every Column
-    * construction logged a "replaced a previously registered function"
-    * WARN per call — thousands of lines across a bench run. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("graft_dot")))
-      reg.createOrReplaceTempFunction(
-        "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    if (!reg.functionExists(FunctionIdentifier("graft_vec_maxabs")))
-      reg.createOrReplaceTempFunction(
-        "graft_vec_maxabs", exprs => VecMaxAbs(exprs.head), "built-in")
-    if (!reg.functionExists(FunctionIdentifier("graft_jl_project")))
-      reg.createOrReplaceTempFunction(
-        "graft_jl_project", exprs => JlProject(exprs(0), exprs(1)), "built-in")
-  }
+  def dot(a: Column, b: Column): Column = column(DotProduct(expression(a), expression(b)))
 
-  /** Column builders: registered on the thread's active session at plan
-    * construction (always the session the frame came from in this
-    * single-session engine), resolved by name at analysis. */
-  def dot(a: Column, b: Column): Column = {
-    register(SparkSession.active)
-    call_function("graft_dot", a, b)
-  }
+  def maxAbs(a: Column): Column = column(VecMaxAbs(expression(a)))
 
-  def maxAbs(a: Column): Column = {
-    register(SparkSession.active)
-    call_function("graft_vec_maxabs", a)
-  }
-
-  def jlProject(a: Column, outDim: Int): Column = {
-    register(SparkSession.active)
-    call_function("graft_jl_project", a,
-      org.apache.spark.sql.functions.lit(outDim))
-  }
+  def jlProject(a: Column, outDim: Int): Column =
+    column(JlProject(expression(a), Literal(outDim)))
 }

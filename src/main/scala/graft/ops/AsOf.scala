@@ -72,6 +72,8 @@ object AsOf {
       leftTime: String, rightTime: String,
       payload: Seq[(String, String)], strict: Boolean = false): DataFrame = {
     val spark = left.sparkSession
+    // the strategy's only install: idempotent, on first use, so any
+    // session plans the node (no SQL text produces it)
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy

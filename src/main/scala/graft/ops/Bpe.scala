@@ -31,10 +31,8 @@ object Bpe {
     * in learning order. Stops early if no adjacent pair remains. */
   def train(docs: DataFrame, merges: Int): DataFrame = {
     val spark = docs.sparkSession
-    graft.functions.TextExprs.register(spark,
-      TextStats.langStopwords.map(_._2))
     val words = docs
-      .select(explode(graft.functions.TextExprs.alphaTokens(spark, "text")).as("w"))
+      .select(explode(graft.functions.TextExprs.alphaTokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
     var syms = words.select(col("cnt"),
       transform(sequence(lit(1), length(col("w"))), i =>
@@ -96,10 +94,7 @@ object Bpe {
     * sha-256 of the full subword stream in order (proving the encoding
     * byte-exact, the reassembly recipe of Curation). */
   def encode(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.TextExprs.register(spark,
-      TextStats.langStopwords.map(_._2))
-    val words = graft.functions.TextExprs.alphaTokens(spark, "text")
+    val words = graft.functions.TextExprs.alphaTokens(col("text"))
     // codegen'd one-pass encode (graft.functions.BpeExpr): the composed
     // form — transform(words, w => merges.foldLeft(chars(w))(mergePair)) —
     // measured 14.0 s at sf0.1 (interpreted HOF fold per merge per word);
@@ -118,10 +113,7 @@ object Bpe {
     * expression is tested against (BpeSpec side-by-side). */
   private[ops] def encodeViaFolds(docs: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.TextExprs.register(spark,
-      TextStats.langStopwords.map(_._2))
-    val words = graft.functions.TextExprs.alphaTokens(spark, "text")
+    val words = graft.functions.TextExprs.alphaTokens(col("text"))
     val subwords = transform(words, { w =>
       val chars = transform(sequence(lit(1), length(w)), i =>
         substring(w, i, lit(1)))

@@ -99,10 +99,9 @@ object Curation {
     // ran three interpreted lambdas per gram, the cost class WordNgrams
     // was built to kill. Index i = gram starting at token i, empty under
     // w tokens, so posexplode emits exactly the old (pos, gram) rows.
-    graft.functions.HashExprs.registerWordNgramsAll(docs.sparkSession, w)
     val grams = stamped
-      .select(col("doc_id"), posexplode(
-        graft.functions.HashExprs.wordNgramsAll(docs.sparkSession, "text")))
+      .select(col("doc_id"),
+        posexplode(graft.functions.HashExprs.wordNgramsAll(col("text"), w)))
       .toDF("doc_id", "pos", "gram")
       // one materialization for both consumers (the frequency aggregate
       // and the starts join) — without it each branch re-scans the corpus

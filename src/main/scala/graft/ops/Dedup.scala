@@ -218,11 +218,9 @@ object Dedup {
     * plan and codegen enough that compile time dominates, and evaluates
     * lambdas interpretively; the expression is one tight loop per row. */
   def withMinhashSignature(docsWithShingles: DataFrame): DataFrame = {
-    HashExprs.register(docsWithShingles.sparkSession, hashA, hashB, MinhashP)
     docsWithShingles
       .withColumn("n_sh", size(col("shingles")))
-      .withColumn("signature",
-        HashExprs.minhashSig(docsWithShingles.sparkSession, "shingles"))
+      .withColumn("signature", HashExprs.minhashSig(col("shingles"), hashA, hashB, MinhashP))
   }
 
   /** LSH banding: (band index, bucket hash) rows per document. Documents
@@ -256,10 +254,9 @@ object Dedup {
     * Gram arrays are only built for the candidate ids the verify stage
     * actually compares. */
   def minhashPairs(docs: DataFrame, threshold: Double = 0.5, w: Int = 3): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.HashExprs.registerMinHashDoc(spark, w, hashA, hashB, MinhashP)
     val sigs = docs
-      .select(col("doc_id"), graft.functions.HashExprs.minhashDoc(spark, "text").as("ms"))
+      .select(col("doc_id"),
+        HashExprs.minhashDoc(col("text"), w, hashA, hashB, MinhashP).as("ms"))
       .select(col("doc_id"), col("ms.n_sh").as("n_sh"), col("ms.sig").as("signature"))
     // Materialize the bucketed side once: the self-join would otherwise
     // recompute the whole sign→band subtree for each side (the aliased
@@ -308,10 +305,8 @@ object Dedup {
   /** 32-bit SimHash per document (custom expression — see
     * withMinhashSignature for the rationale). */
   def simhashes(docs: DataFrame): DataFrame = {
-    HashExprs.register(docs.sparkSession, hashA, hashB, MinhashP)
     docs.select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        HashExprs.simhash32(docs.sparkSession, "toks").as("simhash"))
+      .select(col("doc_id"), HashExprs.simhash32(col("toks")).as("simhash"))
   }
 
   /** Shared pigeonhole-banded Hamming pair miner: split an integer hash

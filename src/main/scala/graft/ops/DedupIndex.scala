@@ -48,9 +48,8 @@ object DedupIndex {
 
   /** Fused text→signature pass (one codegen'd expression per row). */
   def signatures(docs: DataFrame, w: Int = 3): DataFrame = {
-    val spark = docs.sparkSession
-    HashExprs.registerMinHashDoc(spark, w, Dedup.hashA, Dedup.hashB, Dedup.MinhashP)
-    docs.select(col("doc_id"), HashExprs.minhashDoc(spark, "text").as("ms"))
+    docs.select(col("doc_id"), HashExprs.minhashDoc(col("text"), w,
+        Dedup.hashA, Dedup.hashB, Dedup.MinhashP).as("ms"))
       .select(col("doc_id"), col("ms.n_sh").as("n_sh"),
         col("ms.sig").as("signature"))
   }

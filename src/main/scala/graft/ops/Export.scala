@@ -58,9 +58,7 @@ object Export {
   def tokenBinShards(docs: DataFrame, merges: Seq[(String, String)],
       dir: String, n: Int): Unit = {
     val spark = docs.sparkSession
-    graft.functions.TextExprs.register(spark,
-      TextStats.langStopwords.map(_._2))
-    val words = graft.functions.TextExprs.alphaTokens(spark, "text")
+    val words = graft.functions.TextExprs.alphaTokens(col("text"))
     val flat = graft.functions.BpeExpr.subwords(words, merges)
     // the encode runs ONCE: vocab collect and shard write are two
     // actions over this persisted projection (subword arrays only — the

@@ -247,12 +247,11 @@ object Similarity {
     * pair space is bucket-local — the shape that scales to a corpus that
     * cannot be cross-joined. */
   def rpLshTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.functions.HashExprs.registerRpLsh(spark, RpPlanes, RpBitsPerBand)
     def banded(df: DataFrame, idAs: String, embAs: String, normAs: String): DataFrame =
       df.select(col("vec_id").as(idAs), col("embedding").as(embAs),
           norm(col("embedding")).as(normAs),
-          posexplode(graft.functions.HashExprs.rpLshBuckets(spark, "embedding")))
+          posexplode(graft.functions.HashExprs.rpLshBuckets(
+            col("embedding"), RpPlanes, RpBitsPerBand)))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
     val c = banded(corpus, "neighbor_id", "c_emb", "c_norm")
     val q = banded(queries, "query_id", "q_emb", "q_norm")
@@ -308,10 +307,9 @@ object Similarity {
     * embeddings are re-fetched by id for the surviving candidates — the
     * same candidate-table diet as Dedup.minhashPairs. */
   def cosineNearDupLsh(corpus: DataFrame, threshold: Double): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.functions.HashExprs.registerRpLsh(spark, RpPlanes, RpBitsPerBand)
     val banded = corpus.select(col("vec_id"),
-        posexplode(graft.functions.HashExprs.rpLshBuckets(spark, "embedding")))
+        posexplode(graft.functions.HashExprs.rpLshBuckets(
+          col("embedding"), RpPlanes, RpBitsPerBand)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
       .persist() // candidate table: one materialization for both join sides
     val left = banded.select(col("band"), col("bucket"), col("vec_id").as("id_a"))

@@ -29,20 +29,15 @@ object TextStats {
     * over the `text` column — the codegen'd substrate for quality/langid/
     * gopher/funnel (their composed-built-in forms pay an interpreted
     * higher-order-function step per token). */
-  private def registerExprs(docs: DataFrame): Unit =
-    graft.functions.TextExprs.register(docs.sparkSession, langStopwords.map(_._2))
-
-  private def signals(docs: DataFrame): Column = {
-    registerExprs(docs)
-    graft.functions.TextExprs.textSignals(docs.sparkSession, "text")
-  }
+  private def signals: Column =
+    graft.functions.TextExprs.textSignals(col("text"), langStopwords.map(_._2))
 
   /** Rows passing the shared Gopher keep-gate — the composable filter
     * form of [[gopherQuality]] for pipelines (e.g. the streaming curated
     * ingest) that need the gate itself rather than the signal report.
     * Same single source of thresholds, so it cannot drift. */
   def qualityKeep(docs: DataFrame): DataFrame =
-    docs.filter(gopherSignalsFrom(signals(docs)).keep)
+    docs.filter(gopherSignalsFrom(signals).keep)
 
   /** BPE-style pre-tokenization pattern (GPT-2-shaped, simplified to the
     * character classes present in the corpus): contractions, space-glued
@@ -73,7 +68,7 @@ object TextStats {
     * any engine evaluating the same IEEE expressions. */
   def quality(docs: DataFrame): DataFrame = {
     import graft.functions.TextExprs._
-    val sig = signals(docs)
+    val sig = signals
     val nTokens = element_at(sig, NTokens).cast("double")
     val nChars = length(col("text")).cast("double")
     docs.select(
@@ -90,7 +85,7 @@ object TextStats {
   /** Language-ID heuristic: per-language stopword hit counts, argmax with
     * ties resolved by registry order, no hits at all → "und". */
   def langId(docs: DataFrame): DataFrame = {
-    val scored = docs.withColumn("_sig", signals(docs))
+    val scored = docs.withColumn("_sig", signals)
     def hitCol(i: Int): Column =
       element_at(col("_sig"), graft.functions.TextExprs.LangBase + i)
     val best = greatest(langStopwords.indices.map(hitCol): _*)
@@ -110,7 +105,7 @@ object TextStats {
     * All signals are narrow per-row array math — no shuffle, linear scale.
     */
   def gopherQuality(docs: DataFrame): DataFrame = {
-    val sig = gopherSignalsFrom(signals(docs))
+    val sig = gopherSignalsFrom(signals)
     docs.select(
       col("doc_id"),
       sig.nTokens.as("n_tokens"),
@@ -161,7 +156,7 @@ object TextStats {
     * the filters it reports on. */
   def reportCard(docs: DataFrame): DataFrame = {
     import graft.functions.TextExprs._
-    val sigged = docs.select(col("source"), signals(docs).as("_sig"))
+    val sigged = docs.select(col("source"), signals.as("_sig"))
     sigged.groupBy("source").agg(
         count(lit(1)).as("n_docs"),
         sum(element_at(col("_sig"), NTokens)).as("total_tokens"),
@@ -177,10 +172,9 @@ object TextStats {
     * (one shuffle on doc_id over exploded tokens — at corpus scale the
     * partial count aggregate absorbs the fan-in before the exchange). */
   def repetition(docs: DataFrame): DataFrame = {
-    registerExprs(docs)
     val toksed = docs.select(col("doc_id"), tokens(col("text")).as("_toks"))
     val n = size(col("_toks"))
-    val grams = graft.functions.TextExprs.wordBigrams(docs.sparkSession, "_toks")
+    val grams = graft.functions.TextExprs.wordBigrams(col("_toks"))
     val narrow = toksed.select(
       col("doc_id"),
       n.cast("bigint").as("n_tokens"),
@@ -251,7 +245,6 @@ object TextStats {
     * by term), both partial-aggregated. One source so the two rankers
     * cannot drift in tokenization or counting. */
   private def termStats(docs: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    registerExprs(docs)
     // The explicit isNotNull below never drops a row (doc_id is a key) but
     // makes every consumer's tokenize subtree canonically IDENTICAL: the
     // downstream joins push isnotnull(doc_id) into only SOME branches, and
@@ -263,7 +256,7 @@ object TextStats {
     val words = docs
       .filter(col("doc_id").isNotNull)
       .select(col("doc_id"),
-        graft.functions.TextExprs.alphaTokens(docs.sparkSession, "text").as("_toks"))
+        graft.functions.TextExprs.alphaTokens(col("text")).as("_toks"))
       .select(col("doc_id"), explode(col("_toks")).as("term"))
     val tf = words.groupBy("doc_id", "term").agg(count(lit(1)).as("cnt"))
     val docTokens = tf.groupBy("doc_id").agg(sum("cnt").as("doc_tokens"))
@@ -354,14 +347,12 @@ object TextStats {
 
   private def contaminationImpl(docs: DataFrame, evalMod: Int, plantMod: Int,
       w: Int, bloomPrefilter: Boolean): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.HashExprs.registerWordNgrams(spark, w)
     val marker = " alpha bravo charlie delta echo foxtrot golf hotel"
     val stamped = docs.select(col("doc_id"),
       when(col("doc_id") % evalMod === 0 || col("doc_id") % plantMod === 0,
         concat(col("text"), lit(marker))).otherwise(col("text")).as("text"))
     def gramsOf(df: DataFrame): DataFrame = df.select(col("doc_id"),
-      explode(graft.functions.HashExprs.wordNgrams(spark, "text")).as("gram"))
+      explode(graft.functions.HashExprs.wordNgrams(col("text"), w)).as("gram"))
     val evalGramsBase = gramsOf(stamped.where(col("doc_id") % evalMod === 0))
       .select("gram").distinct()
     // bloom mode materializes the eval grams once: the bloom build and the
@@ -406,7 +397,7 @@ object TextStats {
     // and stages 4-5 are a second aggregate over the dedup window (the
     // one unavoidable shuffle — on the survivors only).
     val sigged = docs.select(col("doc_id"), col("text"),
-      signals(docs).as("_sig"))
+      signals.as("_sig"))
     val keep = gopherSignalsFrom(col("_sig")).keep
     val flagged = sigged.select(col("doc_id"), col("text"),
       keep.as("_keep"), (keep && langIdentifiedFrom(col("_sig"))).as("_lang"))
@@ -465,13 +456,11 @@ object TextStats {
     * Docs with fewer than two alphabetic tokens are excluded (they have
     * no bigrams). */
   def bigramLmScore(docs: DataFrame): DataFrame = {
-    registerExprs(docs)
-    val spark = docs.sparkSession
     val base = docs.select(col("doc_id"),
-      graft.functions.TextExprs.alphaTokens(spark, "text").as("toks"))
+      graft.functions.TextExprs.alphaTokens(col("text")).as("toks"))
     val n = size(col("toks"))
     val grams = base.where(n >= 2).select(col("doc_id"),
-      explode(graft.functions.TextExprs.wordBigrams(spark, "toks")).as("gram"))
+      explode(graft.functions.TextExprs.wordBigrams(col("toks"))).as("gram"))
     // persist the per-doc bigram counts: model, prefix AND the probe side
     // all derive from this one table — without the persist each rebuilds
     // the tokenize+explode from the parquet scan (4 corpus scans; measured

@@ -10,8 +10,8 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
 
 /** Whole-operator as-of join as a first-class Catalyst plan — the (c) rung
   * of the extension ladder (logical node → planner strategy → physical
-  * exec, registered via `SparkSessionExtensions` /
-  * `spark.experimental.extraStrategies`).
+  * exec; `graft.ops.AsOf.joinPriorExec` installs the strategy in
+  * `spark.experimental.extraStrategies` on first use).
   *
   * Why a custom exec when the union-merge form (graft.ops.AsOf.joinPrior)
   * already has the optimal exchange+sort skeleton: the window form buffers

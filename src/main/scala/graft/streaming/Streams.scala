@@ -747,9 +747,6 @@ object Streams {
         .start()
     }
 
-  final case class UserEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  final case class UserRunning(user_id: Long, n_events: Long, total_value: Double)
-
   /** Micros-typed event for the exact stateful totals: the double value is
     * converted to integer micros at the stream edge so state accumulation
     * is a Long add — exact, order-independent, and therefore comparable
@@ -758,7 +755,10 @@ object Streams {
   final case class UserEventM(user_id: Long, micros: Long)
   final case class UserTotal(user_id: Long, n_events: Long, total_micros: Long)
 
-  /** Exact-arithmetic twin of [[runningTotals]] used by the driver entry. */
+  /** Arbitrary stateful processing: per-user running totals maintained in
+    * the state store across triggers (KeyValueGroupedDataset +
+    * flatMapGroupsWithState) — the pattern for custom state the built-in
+    * windows can't express. Exact: the state adds integer micros. */
   def runningTotalsExact(events: Dataset[UserEventM]): Dataset[UserTotal] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
@@ -775,6 +775,14 @@ object Streams {
       }
   }
 
+  /** Events as [[UserEventM]]: each value converted to integer micros. */
+  private[streaming] def eventMicros(events: DataFrame): Dataset[UserEventM] = {
+    import events.sparkSession.implicits._
+    events.select(col("user_id"),
+        (col("value").cast("decimal(18,6)") * lit(1000000L)).cast("long").as("micros"))
+      .as[UserEventM]
+  }
+
   /** Driver entry for arbitrary stateful processing: per-user totals via
     * flatMapGroupsWithState run to completion with `AvailableNow`. Update
     * mode emits one row per (trigger, user); the final state per user is
@@ -782,11 +790,7 @@ object Streams {
     * equals the batch GROUP BY — which is the oracle. */
   def totalsAvailableNow(spark: SparkSession, dir: String,
       queryName: String = "ev_running_stream_out"): DataFrame = {
-    import spark.implicits._
-    val ev = readEvents(spark, dir)
-      .select(col("user_id"),
-        (col("value").cast("decimal(18,6)") * lit(1000000L)).cast("long").as("micros"))
-      .as[UserEventM]
+    val ev = eventMicros(readEvents(spark, dir))
     withConf(spark, "spark.sql.shuffle.partitions", StreamPartitions) {
       val q = runningTotalsExact(ev).toDF()
         .writeStream.format("memory").queryName(queryName)
@@ -803,26 +807,6 @@ object Streams {
         (col("total_micros").cast("decimal(38,6)") / lit(1000000))
           .cast("double").as("total_value"))
       .orderBy("user_id")
-  }
-
-  /** Arbitrary stateful processing: per-user running totals maintained in
-    * the state store across triggers (KeyValueGroupedDataset +
-    * flatMapGroupsWithState) — the pattern for custom state the built-in
-    * windows can't express. */
-  def runningTotals(events: Dataset[UserEvent]): Dataset[UserRunning] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserRunning, UserRunning](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[UserEvent], state: GroupState[UserRunning]) =>
-          val prev = state.getOption.getOrElse(UserRunning(userId, 0L, 0.0))
-          var n = prev.n_events
-          var total = prev.total_value
-          batch.foreach { e => n += 1; total += e.value }
-          val next = UserRunning(userId, n, total)
-          state.update(next)
-          Iterator.single(next)
-      }
   }
 
   /** Continuously-maintained incremental view: the source table's

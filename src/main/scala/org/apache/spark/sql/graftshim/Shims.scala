@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The one sanctioned crossing into `private[sql]` territory: turning a
@@ -33,5 +34,15 @@ object Shims {
   /** Whether a Column's expression tree is deterministic (Spark 4 no
     * longer exposes `Column.expr` publicly). */
   def isDeterministic(c: org.apache.spark.sql.Column): Boolean =
-    org.apache.spark.sql.classic.ExpressionUtils.expression(c).deterministic
+    expression(c).deterministic
+
+  /** A Column's Catalyst expression. */
+  def expression(c: org.apache.spark.sql.Column): Expression =
+    org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** A Column over a constructed Catalyst expression — the inverse of
+    * [[expression]]. The custom expressions in `graft.functions` reach
+    * DataFrames this way, bound to their parameters when built. */
+  def column(e: Expression): org.apache.spark.sql.Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(e)
 }

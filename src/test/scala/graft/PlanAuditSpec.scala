@@ -95,11 +95,10 @@ class PlanAuditSpec extends SparkSuite {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.ArrayType
     val docs = Tables.documents(spark, sf0001)
-    graft.functions.HashExprs.registerMinHashDoc(spark, 3,
-      graft.ops.Dedup.hashA, graft.ops.Dedup.hashB, graft.ops.Dedup.MinhashP)
     val buckets = graft.ops.Dedup.lshBuckets(
       docs.select(col("doc_id"),
-          graft.functions.HashExprs.minhashDoc(spark, "text").as("ms"))
+          graft.functions.HashExprs.minhashDoc(col("text"), 3, graft.ops.Dedup.hashA,
+            graft.ops.Dedup.hashB, graft.ops.Dedup.MinhashP).as("ms"))
         .select(col("doc_id"), col("ms.n_sh").as("n_sh"), col("ms.sig").as("signature")))
     // the 8x-exploded exchange input must not contain any array column —
     // shingle arrays are re-fetched by id at the verify stage only

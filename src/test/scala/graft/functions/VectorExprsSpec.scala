@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.SparkSuite
 import org.apache.spark.sql.AnalysisException
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 class VectorExprsSpec extends SparkSuite {
@@ -86,19 +85,8 @@ class VectorExprsSpec extends SparkSuite {
     assert(e.getMessage.contains("array<float>"))
     val fl = Seq(Tuple1(floats(1, 2, 3))).toDF("v")
     val e2 = intercept[AnalysisException] {
-      fl.select(call_function("graft_jl_project", col("v"), lit(0))).collect()
+      fl.select(VectorExprs.jlProject(col("v"), 0)).collect()
     }
     assert(e2.getMessage.contains("positive"))
-  }
-
-  test("registration is once-per-session (no replace on repeat)") {
-    VectorExprs.register(spark)
-    val reg = spark.sessionState.functionRegistry
-    assert(reg.functionExists(FunctionIdentifier("graft_dot")))
-    val before = reg.lookupFunctionBuilder(FunctionIdentifier("graft_dot")).get
-    VectorExprs.register(spark) // must be a no-op, not a replace
-    val after = reg.lookupFunctionBuilder(FunctionIdentifier("graft_dot")).get
-    // same builder instance proves no re-registration (no WARN) happened
-    assert(before eq after)
   }
 }

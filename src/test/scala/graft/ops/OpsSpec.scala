@@ -230,13 +230,12 @@ class OpsSpec extends SparkSuite {
   }
 
   test("word ngrams expression: distinct grams, short-doc fallback") {
-    graft.functions.HashExprs.registerWordNgrams(spark, 3)
     val df = Seq(
       (1L, "a b c d a b c d"), // grams: "a b c","b c d","c d a","d a b" (distinct)
       (2L, "x y"))             // shorter than w -> whole text
       .toDF("doc_id", "text")
     val out = df.select(col("doc_id"),
-        graft.functions.HashExprs.wordNgrams(spark, "text").as("g"))
+        graft.functions.HashExprs.wordNgrams(col("text"), 3).as("g"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(out(1L) === Seq("a b c", "b c d", "c d a", "d a b"))
     assert(out(2L) === Seq("x y"))

@@ -247,9 +247,8 @@ class StreamsSpec extends SparkSuite {
     writeEventsFile(dir, "zz-heartbeat", Seq((999999L, 999999L, at, "click")), mtime)
 
   test("stateful running totals match the batch aggregate after one batch") {
-    val stream = Streams.readEvents(spark, eventsDir)
-      .select($"user_id", $"ts", $"value").as[Streams.UserEvent]
-    val q = Streams.runningTotals(stream)
+    val stream = Streams.eventMicros(Streams.readEvents(spark, eventsDir))
+    val q = Streams.runningTotalsExact(stream)
       .writeStream.format("memory").queryName("running_out")
       .outputMode("update").start()
     try {
